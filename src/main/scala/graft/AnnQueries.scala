@@ -25,6 +25,9 @@ object AnnQueries {
     Sources.table(s, dir, "embeddings")
       .where(graft.ann.Ann.norm(col("embedding")) > 0)
 
+  /** The cached ANN artifacts derive from the embeddings table only. */
+  private val Embs = Seq("embeddings.parquet")
+
   /** The query point: the lowest-id vector (deterministic, oracle-able). */
   private def queryVec(e: org.apache.spark.sql.DataFrame) =
     e.orderBy(col("vec_id")).limit(1)
@@ -54,38 +57,27 @@ object AnnQueries {
       x.cast("double") *
         when(i < lit(AnisoBoostDims), lit(8.0)).otherwise(lit(0.125))))
 
-  /** Build the IVF+PQ serving artifact once per dataset (fingerprint-
-    * keyed like the index and signature-store caches): centroids,
+  /** The IVF+PQ serving artifact, built once per dataset: centroids,
     * codebooks, and the cell-partitioned code table — what a production
     * pipeline persists per crawl so searches never open the corpus.
-    * `java.io.File` probes are in-contract here: local `/tmp` gate
-    * cache only, per the [[graft.tools.LocalFs]] scope contract (the
-    * Ann library APIs themselves are scheme-agnostic). */
+    * The geometry is part of the artifact's identity: same data under
+    * a changed nlist derivation must rebuild, not serve the old
+    * layout. */
   private def ensureIvfpqArtifact(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/embeddings.parquet"))
+      dir: String): String = {
     val e = emb(s, dir)
     val (nl, _, mod) = ivfGeom(e)
-    // the geometry is part of the artifact's identity: same data under a
-    // changed nlist derivation must rebuild, not serve the old layout
-    val key = s"$dirKey-$fp-nl$nl"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-ivfpq/$key"
-    if (!new java.io.File(s"$path/codes/_SUCCESS").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-ivfpq",
-        s"$dirKey-", key)
+    graft.tools.LocalFs.cached("ivfpq", dir, Embs, s"nl$nl") { p =>
       val centroids = Ann.ivfCentroids(e, nlist = nl, modulus = mod)
       val cb = Ann.pqCodebooks(e, modulus = sampleMod(e))
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      cb.write.mode("overwrite").parquet(s"$path/codebooks")
+      centroids.write.mode("overwrite").parquet(s"$p/centroids")
+      cb.write.mode("overwrite").parquet(s"$p/codebooks")
       // skew-guarded layout: bounded rows per file within each cell
       // dir, one file for balanced cells (Ann.boundedCellLayout)
       Ann.boundedCellLayout(Ann.ivfpqEncode(e, centroids, cb))
         .write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$path/codes")
+        .partitionBy("cell").parquet(s"$p/codes")
     }
-    path
   }
 
   /** Old-corpus/new-batch split for the INCREMENTAL index gate (the
@@ -100,41 +92,28 @@ object AnnQueries {
     * APPENDED into the cell-partitioned code table — the `dragnet
     * build -u` move for the vector index: a 100 TB index absorbs a
     * crawl by encoding the new rows only, never retraining or
-    * re-encoding what it already holds. Kept in its own cache root so
-    * [[ensureIvfpqArtifact]]'s stale-sibling sweep can't collect it. */
+    * re-encoding what it already holds. */
   private def ensureIvfpqIncArtifact(s: org.apache.spark.sql.SparkSession,
-      dir: String): (String, Int) = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/embeddings.parquet"))
+      dir: String): (String, Int) = {
     val e = emb(s, dir)
     val eOld = e.where(expr(AnnOldWhere))
     val (nl, np, mod) = ivfGeom(eOld)
-    val key = s"$dirKey-$fp-nl$nl"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-ivfpq-inc/$key"
-    // marker AFTER the append (the chained-store pattern): an
-    // interrupted build rebuilds cleanly instead of double-appending
-    val marker = new java.io.File(s"$path/_GRAFT_APPENDED")
-    if (!marker.exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-ivfpq-inc",
-        s"$dirKey-", key)
-      graft.tools.LocalFs.deleteRec(java.nio.file.Paths.get(path))
+    val path = graft.tools.LocalFs.cached("ivfpq-inc", dir, Embs, s"nl$nl") { p =>
       val centroids = Ann.ivfCentroids(eOld, nlist = nl, modulus = mod)
       val cb = Ann.pqCodebooks(eOld, modulus = sampleMod(eOld))
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      cb.write.mode("overwrite").parquet(s"$path/codebooks")
+      centroids.write.mode("overwrite").parquet(s"$p/centroids")
+      cb.write.mode("overwrite").parquet(s"$p/codebooks")
       Ann.boundedCellLayout(Ann.ivfpqEncode(eOld, centroids, cb))
         .write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$path/codes")
+        .partitionBy("cell").parquet(s"$p/codes")
       // the incremental step: encode ONLY the new batch, against the
       // persisted halves (read back — the artifact is the contract,
       // not the in-memory frames), and append its files per cell
       Ann.boundedCellLayout(Ann.ivfpqEncode(e.where(expr(AnnNewWhere)),
-          graft.sources.Sources.parquet(s, s"$path/centroids"),
-          graft.sources.Sources.parquet(s, s"$path/codebooks")))
+          graft.sources.Sources.parquet(s, s"$p/centroids"),
+          graft.sources.Sources.parquet(s, s"$p/codebooks")))
         .write.mode("append")
-        .partitionBy("cell").parquet(s"$path/codes")
-      marker.createNewFile()
+        .partitionBy("cell").parquet(s"$p/codes")
     }
     (path, np)
   }
@@ -1306,26 +1285,17 @@ object AnnQueries {
     "label_eq_mod4" ->
       (col("label") === FilterLabel && col("vec_id") % 4 === 3))
 
-  /** Fingerprint-cached slice-count store (r18 verdict item 4): the
-    * per-predicate populations computed ONCE beside the artifact
-    * caches, so every filtered serve reads one stored row instead of
-    * re-counting its slice. */
+  /** Slice-count store (r18 verdict item 4): the per-predicate
+    * populations computed ONCE beside the artifact caches, so every
+    * filtered serve reads one stored row instead of re-counting its
+    * slice. */
   private def ensureSliceCounts(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/embeddings.parquet"))
-    val key = s"$dirKey-$fp-p${FilteredPredKeys.size}"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-slicecnt/$key"
-    if (!new java.io.File(s"$path/_GRAFT_DONE").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-slicecnt",
-        s"$dirKey-", key)
-      Ann.writeSliceCounts(s, path,
+      dir: String): String =
+    graft.tools.LocalFs.cached("slicecnt", dir, Embs,
+        s"p${FilteredPredKeys.size}") { p =>
+      Ann.writeSliceCounts(s, p,
         Sources.table(s, dir, "embeddings"), FilteredPredKeys)
-      new java.io.File(s"$path/_GRAFT_DONE").createNewFile()
     }
-    path
-  }
 
   private def filteredIvf(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =

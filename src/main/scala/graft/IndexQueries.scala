@@ -28,16 +28,9 @@ object IndexQueries {
       FieldSpec.plain("event_type"),
       FieldSpec.plain("user_id"))))
 
-  /** Cache path keyed by dir name AND a content fingerprint of the
-    * events table: a regenerated dataset rebuilds its indexes instead
-    * of silently serving rollups of dead data against a live-data
-    * oracle (same contract as the dedup signature store). */
-  private def indexKey(sfDir: String): String =
-    s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}-${graft.tools.LocalFs
-      .fingerprint(new java.io.File(s"$sfDir/events.parquet"))}"
-
-  private def indexPath(sfDir: String, interval: String): String =
-    s"${graft.tools.LocalFs.TmpRoot}/graft-index/${indexKey(sfDir)}/$interval"
+  /** The index trees derive from the events table only; one tree per
+    * interval (the tag), all under one fingerprint. */
+  private val Events = Seq("events.parquet")
 
   /** Recursive delete for the compact-roundtrip scratch tree. */
   private def deleteRec(p: java.nio.file.Path): Unit =
@@ -68,34 +61,20 @@ object IndexQueries {
 
   /** Build the two-metric index once per sfDir (both rollups written
     * in ONE input pass — Index.build caches the scan for multi-metric
-    * builds). `java.io.File` markers are in-contract here: local `/tmp`
-    * gate cache only ([[graft.tools.LocalFs]] scope contract); Index
-    * itself is scheme-agnostic (FileSystemSchemeSpec). */
+    * builds). */
   private def ensureMulti(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val path = s"${indexPath(sfDir, "day")}-multi"
-      val marker = new java.io.File(
-        s"${Index.metricPath(path, "day", "by_type")}/_SUCCESS")
-      if (!marker.exists())
-        Index.build(Sources.events(spark, sfDir), multiMetrics, path,
-          timeField = "ts", interval = "day")
-      path
+    graft.tools.LocalFs.cached("index", sfDir, Events, "day-multi") { p =>
+      Index.build(Sources.events(spark, sfDir), multiMetrics, p,
+        timeField = "ts", interval = "day")
     }
 
-  /** Build once per (sfDir, interval); parquet _SUCCESS is the marker. */
+  /** Build once per (sfDir, interval). */
   private def ensureBuilt(spark: SparkSession, sfDir: String,
-                          interval: String): String = synchronized {
-    val path = indexPath(sfDir, interval)
-    val marker = new java.io.File(
-      s"${Index.metricPath(path, interval, metrics.head.name)}/_SUCCESS")
-    if (!marker.exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-index",
-        s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}-", indexKey(sfDir))
-      Index.build(Sources.events(spark, sfDir), metrics, path,
+                          interval: String): String =
+    graft.tools.LocalFs.cached("index", sfDir, Events, interval) { p =>
+      Index.build(Sources.events(spark, sfDir), metrics, p,
         timeField = "ts", interval = interval)
     }
-    path
-  }
 
   private def serve(interval: String, cfg: QueryConfig)
       : (SparkSession, String) => DataFrame =
@@ -146,7 +125,7 @@ object IndexQueries {
         val cutoff = java.time.Instant.parse("2024-01-16T00:00:00Z")
         // fixed per-sf path, rebuilt in place (the POINT is to exercise
         // build+update) — a fresh temp dir per run would litter /tmp
-        val path = indexPath(dir, "update")
+        val path = graft.tools.LocalFs.path("index", dir, Events, "update")
         val ev = Sources.events(s, dir)
         val cutCol = graft.functions.epochSecs(
           org.apache.spark.sql.functions.col("ts"))

@@ -627,43 +627,24 @@ object RetrievalQueries {
         ORDER BY b.qid"""
   }
 
-  /** Persisted-lexicon cache, fingerprint-keyed like the IVF+PQ and
-    * signature-store artifacts: same data + same vocab cap → reuse;
-    * anything else rebuilds and the stale sibling is swept.
-    * `java.io.File` probes are in-contract here: local `/tmp` gate
-    * cache only ([[graft.tools.LocalFs]] scope contract); Bm25's own
-    * lexicon maintenance is scheme-agnostic (FileSystemSchemeSpec). */
-  /** (sanitized dir key, fingerprinted cache key) shared by the base
-    * and incremental lexicon caches and the bench build legs. */
-  private def lexKey(dir: String): (String, String) = {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    // l2 = the tkey-partitioned posting layout; l3 = 4096-bucket
-    // prefix keys (r18); l4 = positional postings (r19). Bumping the
-    // token retires fingerprint-matched stores written under the old
-    // layouts (they lack the tkey / pos columns)
-    (dirKey, s"$dirKey-$fp-vall-l4")
-  }
+  /** The cached lexicons derive from the documents table only. */
+  private val Docs = Seq("documents.parquet")
 
-  /** A lexicon cache entry is complete only when BOTH the postings
-    * dir and the df summary landed (r19: buildLexicon derives df from
-    * the written postings, so summaries land after the artifact). */
-  private def lexBuilt(path: String): Boolean =
-    new java.io.File(s"$path/postings/_SUCCESS").exists() &&
-      new java.io.File(s"$path/df").exists()
+  /** Lexicon layout token: l2 = the tkey-partitioned posting layout;
+    * l3 = 4096-bucket prefix keys (r18); l4 = positional postings
+    * (r19); l5 = versioned summaries. Bumping it retires caches written
+    * under an older layout. */
+  private val LexLayout = "l5"
+
+  /** Tag of the base and incremental lexicon caches and the bench
+    * build legs: the full-vocabulary build. */
+  private val LexTag = s"vall-$LexLayout"
 
   private def ensureLexicon(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val (dirKey, key) = lexKey(dir)
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-lexicon/$key"
-    if (!lexBuilt(path)) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-lexicon",
-        s"$dirKey-", key)
-      Bm25.buildLexicon(docs(s, dir), path)
+      dir: String): String =
+    graft.tools.LocalFs.cached("lexicon", dir, Docs, LexTag) { p =>
+      Bm25.buildLexicon(docs(s, dir), p)
     }
-    path
-  }
 
   /** Bench-only BUILD legs (r15 verdict item 3): the sf1 sweep ran
     * cold, so `retrieval_index_bm25`/`retrieval_index_incremental`
@@ -679,19 +660,21 @@ object RetrievalQueries {
     * already gate the artifact's content. */
   private[graft] def benchBuildLexicon(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.tools.LocalFs.deleteRec(
-      java.nio.file.Paths.get(s"${graft.tools.LocalFs.TmpRoot}/graft-lexicon/${lexKey(dir)._2}"))
+    evict("lexicon", dir)
     ensureLexicon(s, dir)
     s.range(1).toDF("built")
   }
 
   private[graft] def benchBuildLexiconInc(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.tools.LocalFs.deleteRec(
-      java.nio.file.Paths.get(s"${graft.tools.LocalFs.TmpRoot}/graft-lexinc/${lexKey(dir)._2}"))
+    evict("lexinc", dir)
     ensureLexiconInc(s, dir)
     s.range(1).toDF("built")
   }
+
+  private def evict(kind: String, dir: String): Unit =
+    graft.tools.LocalFs.deleteRec(java.nio.file.Paths.get(
+      graft.tools.LocalFs.path(kind, dir, Docs, LexTag)))
 
   /** Old-corpus/new-batch split for the incremental lexicon gate —
     * the same thirds split the incremental ANN gate uses. */
@@ -700,23 +683,14 @@ object RetrievalQueries {
 
   /** Incremental lexicon: built from the old slice (vocabulary frozen
     * there), then the new batch's postings appended and the summaries
-    * integer-added — never a re-tokenize of what's already indexed.
-    * Own cache root so the base lexicon's sibling sweep can't collect
-    * it. */
+    * integer-added — never a re-tokenize of what's already indexed. */
   private def ensureLexiconInc(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val (dirKey, key) = lexKey(dir)
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-lexinc/$key"
-    if (!new java.io.File(s"$path/_APPENDED").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-lexinc",
-        s"$dirKey-", key)
+      dir: String): String =
+    graft.tools.LocalFs.cached("lexinc", dir, Docs, LexTag) { p =>
       val d = docs(s, dir)
-      Bm25.buildLexicon(d.where(expr(LexOldWhere)), path)
-      Bm25.appendLexicon(s, d.where(expr(LexNewWhere)), path)
-      new java.io.File(s"$path/_APPENDED").createNewFile()
+      Bm25.buildLexicon(d.where(expr(LexOldWhere)), p)
+      Bm25.appendLexicon(s, d.where(expr(LexNewWhere)), p)
     }
-    path
-  }
 
   /** The known-item gate's target docs and their planted query terms —
     * derived from the ≤[[TargetCap]] target docs ONLY (in production
@@ -743,51 +717,32 @@ object RetrievalQueries {
     kiQueryTerms(Bm25.postingsOf(targetDocs))
   }
 
-  /** Gate-lexicon cache (fingerprint-keyed, stale siblings swept): the
-    * persisted postings index whose VOCABULARY is the planted
-    * query-term set — built once per corpus fingerprint, then the
-    * recall gate reads ONLY it. */
+  private val KiLexTag = s"t$TargetCap-q$KiTerms-ptgt-$LexLayout"
+
+  /** Gate lexicon: the persisted postings index whose VOCABULARY is
+    * the planted query-term set — built once per corpus fingerprint,
+    * then the recall gate reads ONLY it. */
   private def ensureKiLexicon(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val key = s"$dirKey-$fp-t$TargetCap-q$KiTerms-ptgt-l4"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-kilex/$key"
-    if (!lexBuilt(path)) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-kilex",
-        s"$dirKey-", key)
+      dir: String): String =
+    graft.tools.LocalFs.cached("kilex", dir, Docs, KiLexTag) { p =>
       val d = docs(s, dir)
-      Bm25.buildLexicon(d, path,
+      Bm25.buildLexicon(d, p,
         vocabTermsOverride = Some(kiGateQueries(d).select(col("term"))))
     }
-    path
-  }
 
   /** The incremental twin of [[ensureKiLexicon]]: the gate lexicon is
     * BUILT from the old corpus slice (vocabulary = the planted
     * query-term set, frozen there like any build-time vocab decision)
     * and the new batch's postings APPEND with integer-added summaries
-    * — then the recall gate reads old ∪ new through the store. Own
-    * cache root so the base gate's sibling sweep can't collect it. */
+    * — then the recall gate reads old ∪ new through the store. */
   private def ensureKiLexiconInc(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val key = s"$dirKey-$fp-t$TargetCap-q$KiTerms-ptgt-l4"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-kilexinc/$key"
-    if (!new java.io.File(s"$path/_APPENDED").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-kilexinc",
-        s"$dirKey-", key)
+      dir: String): String =
+    graft.tools.LocalFs.cached("kilexinc", dir, Docs, KiLexTag) { p =>
       val d = docs(s, dir)
-      Bm25.buildLexicon(d.where(expr(LexOldWhere)), path,
+      Bm25.buildLexicon(d.where(expr(LexOldWhere)), p,
         vocabTermsOverride = Some(kiGateQueries(d).select(col("term"))))
-      Bm25.appendLexicon(s, d.where(expr(LexNewWhere)), path)
-      new java.io.File(s"$path/_APPENDED").createNewFile()
+      Bm25.appendLexicon(s, d.where(expr(LexNewWhere)), p)
     }
-    path
-  }
 
   // ---- positional retrieval (r18 verdict item 3): phrase + proximity
   // served from the positional lexicon, plus a known-item recall gate.
@@ -841,24 +796,16 @@ object RetrievalQueries {
     * (the query-log-vocabulary move of [[ensureKiLexicon]], phrase
     * edition). */
   private def ensureKiPhraseLexicon(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val key = s"$dirKey-$fp-t$TargetCap-ph2-l4"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-kiphrase/$key"
-    if (!lexBuilt(path)) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-kiphrase",
-        s"$dirKey-", key)
+      dir: String): String =
+    graft.tools.LocalFs.cached("kiphrase", dir, Docs,
+        s"t$TargetCap-ph2-$LexLayout") { p =>
       val d = docs(s, dir)
       val q = kiPhraseQueries(d)
-      Bm25.buildLexicon(d, path, vocabTermsOverride =
+      Bm25.buildLexicon(d, p, vocabTermsOverride =
         Some((1 to KiPhraseLen).map(i =>
             q.select(col(s"w$i").as("term")): DataFrame)
           .reduceLeft(_ union _)))
     }
-    path
-  }
 
   /** Oracle for retrieval_recall_phrase: adjacency replayed from the
     * text, rank by candidates-strictly-ahead, global per-mille floor. */

@@ -160,50 +160,31 @@ object TextQueries {
   }
 
   /** Persisted BPE-training artifact (final merged corpus state +
-    * learned merge table), fingerprint-keyed like the lexicon and the
-    * IVF+PQ artifacts: training runs ONCE per dataset per machine and
-    * both the learn gate and the apply gate read the same artifact —
-    * deterministic training makes artifact == live output.
-    * `java.io.File` probes are in-contract here: local `/tmp` gate
-    * cache only, per the [[graft.tools.LocalFs]] scope contract. */
+    * learned merge table): training runs ONCE per dataset per machine
+    * and both the learn gate and the apply gate read the same artifact
+    * — deterministic training makes artifact == live output. */
   private def ensureBpe(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val key = s"$dirKey-$fp-m${Text.BpeTrainMerges}"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-bpe/$key"
-    if (!new java.io.File(s"$path/learned/_SUCCESS").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-bpe", s"$dirKey-", key)
+      dir: String): String =
+    graft.tools.LocalFs.cached("bpe", dir, Seq("documents.parquet"),
+        s"m${Text.BpeTrainMerges}") { p =>
       val (state, learned) = Text.bpeTrainFull(docs(s, dir))
-      state.write.mode("overwrite").parquet(s"$path/state")
-      learned.coalesce(1).write.mode("overwrite").parquet(s"$path/learned")
+      state.write.mode("overwrite").parquet(s"$p/state")
+      learned.coalesce(1).write.mode("overwrite").parquet(s"$p/learned")
     }
-    path
-  }
 
-  /** The unigram-LM training artifact, fingerprint-keyed like
-    * [[ensureBpe]]: the EM training runs once per dataset per machine
-    * and the gate serves the persisted vocabulary — deterministic
-    * training makes artifact == live output (UnigramSpec pins the
-    * determinism). `java.io.File` probes are in-contract here: local
-    * `/tmp` gate cache only ([[graft.tools.LocalFs]] scope contract). */
+  /** The unigram-LM training artifact: the EM training runs once per
+    * dataset per machine and the gate serves the persisted vocabulary
+    * — deterministic training makes artifact == live output
+    * (UnigramSpec pins the determinism). */
   private[graft] def ensureUnigram(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
+      dir: String): String = {
     import graft.text.Unigram
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val key = s"$dirKey-$fp-r${Unigram.Rounds}v${Unigram.VocabTarget}"
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-unigram/$key"
-    if (!new java.io.File(s"$path/segs/_SUCCESS").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-unigram",
-        s"$dirKey-", key)
+    graft.tools.LocalFs.cached("unigram", dir, Seq("documents.parquet"),
+        s"r${Unigram.Rounds}v${Unigram.VocabTarget}") { p =>
       val (vocab, segs) = Unigram.trainFull(docs(s, dir))
-      vocab.coalesce(1).write.mode("overwrite").parquet(s"$path/vocab")
-      segs.coalesce(1).write.mode("overwrite").parquet(s"$path/segs")
+      vocab.coalesce(1).write.mode("overwrite").parquet(s"$p/vocab")
+      segs.coalesce(1).write.mode("overwrite").parquet(s"$p/segs")
     }
-    path
   }
 
   /** The text_tokens_bpe oracle, generated from [[Text.BpeMerges]] —

@@ -83,29 +83,18 @@ object UrlQueries {
       Urls.registeredDomain(
         parse_url(Urls.synthUrl(col("doc_id")), lit("HOST"))).as("domain"))
 
-  /** The domain-quota-packed shard artifact (#91e/f), fingerprint-keyed
-    * (the ensureStore discipline); members carry `domain`. The offsets
-    * join is NOT forced broadcast — at web scale the per-(domain,
-    * bucket) offset table's cardinality follows the domain population,
-    * so the planner must pick the strategy from actual size. */
+  /** The domain-quota-packed shard artifact (#91e/f); members carry
+    * `domain`. The offsets join is NOT forced broadcast — at web scale
+    * the per-(domain, bucket) offset table's cardinality follows the
+    * domain population, so the planner must pick the strategy from
+    * actual size. */
   private def ensureDomainShards(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-domainshards/$dirKey-$fp"
-    val marker = new java.io.File(s"$path/_GRAFT_PACKED")
-    if (!marker.exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-domainshards",
-        s"$dirKey-", new java.io.File(path).getName)
-      graft.tools.LocalFs.deleteRec(java.nio.file.Paths.get(path))
-      graft.dedup.Corpus.writeShardsQuota(docsWithDomain(s, dir), path,
+      dir: String): String =
+    graft.tools.LocalFs.cached("domainshards", dir, Seq("documents.parquet")) { p =>
+      graft.dedup.Corpus.writeShardsQuota(docsWithDomain(s, dir), p,
         DomainQuotas, seqLen = 256, shards = 8, srcCol = "domain",
         default = DomainQuotaDefault, broadcastOffsets = false)
-      marker.createNewFile()
     }
-    path
-  }
 
   /** The kept-domain set of `docs` under the blocklist floor — the
     * one-column artifact the streaming admission probe joins against
@@ -123,26 +112,17 @@ object UrlQueries {
       .select(col("domain"))
   }
 
-  /** Persist the OLD slice's kept-domain blocklist once per dataset
-    * (fingerprint-keyed /tmp gate cache, the ensureStore discipline) —
+  /** Persist the OLD slice's kept-domain blocklist once per dataset —
     * the artifact a crawl stream probes, so the static side of the
     * stream-static join reads ~14 rows of parquet instead of
     * recomputing a corpus quality pass per micro-batch. */
   private[graft] def ensureBlocklist(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val dirKey = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val fp = graft.tools.LocalFs.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
-    val path = s"${graft.tools.LocalFs.TmpRoot}/graft-blocklist/$dirKey-$fp"
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      graft.tools.LocalFs.dropStaleSiblings(s"${graft.tools.LocalFs.TmpRoot}/graft-blocklist",
-        s"$dirKey-", new java.io.File(path).getName)
+      dir: String): String =
+    graft.tools.LocalFs.cached("blocklist", dir, Seq("documents.parquet")) { p =>
       keepDomains(Sources.table(s, dir, "documents")
           .where(expr(DedupQueries.OldWhere)))
-        .coalesce(1).write.mode("overwrite").parquet(path)
+        .coalesce(1).write.mode("overwrite").parquet(p)
     }
-    path
-  }
 
   def all: Seq[Q] = Seq(
     // #91a host extraction + URL anatomy: one projection of parse_url

@@ -11,10 +11,10 @@ final class ConcurrentWriterException(msg: String)
 
 /**
  * Single-writer lease for mutable stores (r18 verdict item 6). The
- * two-rename swap and the read-modify-write summary updates
- * (Bm25.appendLexicon, the dedup signature stores) assume ONE writer:
- * two interleaved appends can interleave staging and swap, and the
- * second summary rewrite silently loses the first's adds. This makes
+ * dedup stores' compaction swap and the read-modify-write summary
+ * updates (Bm25.appendLexicon, the dedup signature stores) assume ONE
+ * writer: two interleaved appends can interleave staging and swap, and
+ * the second summary rewrite silently loses the first's adds. This makes
  * the discipline explicit — writers CLAIM the store before mutating,
  * and a second concurrent writer fails LOUDLY with
  * [[ConcurrentWriterException]] instead of corrupting silently; the
@@ -29,8 +29,7 @@ final class ConcurrentWriterException(msg: String)
  * create(overwrite=false) is check-then-create — a TOCTOU hole two
  * same-box writers race straight through); on hdfs:// the
  * no-overwrite create is atomic at the NameNode. Object stores need a
- * conditional put or an external lock service — out of scope here,
- * the same boundary the rename swap's `pointer` protocol documents.
+ * conditional put or an external lock service — out of scope here.
  *
  * A lease OLDER than the TTL (`spark.graft.lease.ttlMs`, default
  * 15 min) is a crashed holder's leftover: it is broken and
@@ -92,12 +91,15 @@ object Lease {
     val token = java.util.UUID.randomUUID().toString
     val now = System.currentTimeMillis()
     if (tryClaim(fs, p, s"$token $now")) return token
-    // held — live or stale?
+    // held — live or stale? A holder creates the file before it
+    // writes the payload, so a file without a stamp is a claim in
+    // progress: its age is the file's own modification time.
     val stamp =
       try {
         val txt = new String(org.apache.hadoop.io.IOUtils
           .readFullyToByteArray(fs.open(p)), "UTF-8")
         txt.split(' ').lift(1).flatMap(_.toLongOption)
+          .orElse(Some(fs.getFileStatus(p).getModificationTime))
       } catch { case _: java.io.IOException => None } // vanished: racer
     stamp match {
       case Some(t) if now - t <= ttlMs(s) =>

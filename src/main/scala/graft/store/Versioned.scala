@@ -5,12 +5,11 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Committer-style POINTER-FILE protocol for atomically swapping a
- * rewritten artifact directory — the object-store-safe alternative to
- * the two-rename directory swap (graft.text.Bm25.swapIn), whose
- * never-torn guarantee needs `FileSystem.rename` on a DIRECTORY to be
- * an atomic metadata move (true on file:// and hdfs://, false on s3a
- * where a directory rename is a per-object copy+delete a crash can
- * interrupt halfway).
+ * rewritten artifact directory. It needs no atomic DIRECTORY rename
+ * (true on file:// and hdfs://, false on s3a, where a directory
+ * rename is a per-object copy+delete a crash can interrupt halfway),
+ * so it is safe on every filesystem. The BM25 lexicon summaries and
+ * the ANN slice-count store are written through it.
  *
  * Layout: `root/<name>.v<N>/` immutable version directories plus one
  * tiny `root/<name>.CURRENT` pointer whose single line names the live
@@ -21,7 +20,7 @@ import org.apache.spark.sql.SparkSession
  * pointer. A single-object rename is safe everywhere the directory
  * rename is not — on s3a it is one atomic copy PUT (readers see the
  * old or the new pointer bytes, never a blend) and on file://+hdfs://
- * it is the same metadata move swapIn relies on.
+ * it is a metadata move.
  *
  * Crash matrix (every row leaves a servable store):
  *  - during the version write: pointer untouched, readers on old;
@@ -167,13 +166,6 @@ object Versioned {
       .getOrElse(throw new java.io.FileNotFoundException(
         s"versioned store $root/$name: no pointer and no complete version"))
     versionDir(root, name, v).toString
-  }
-
-  /** Whether `root/<name>` is pointer-managed (vs a plain directory). */
-  def isVersioned(s: SparkSession, root: String, name: String): Boolean = {
-    val fs = fsOf(s, root)
-    fs.exists(pointerPath(root, name)) ||
-      completeVersions(fs, root, name).nonEmpty
   }
 
   /** One full rewrite: write the next version via `write(dir)`, then

@@ -306,51 +306,19 @@ object Bm25 {
       .agg(count(lit(1)).cast("long").as("tf"),
         sort_array(collect_list(col("p"))).as("pos"))
 
-  /** Swap-protocol selector for the lexicon's driver-size summaries:
-    * `rename` (default) = the two-rename directory swap ([[swapIn]],
-    * atomic on file:// and hdfs://); `pointer` = the committer-style
-    * versioned layout ([[graft.store.Versioned]]) — the REQUIRED
-    * setting when the lexicon root is an object store (s3a://), where
-    * directory renames are not atomic. BOTH sides auto-detect an
-    * existing layout from the bytes ([[summaryPath]] for readers,
-    * [[writeSummary]] for rewrites of an already-versioned store);
-    * the conf only decides the layout of brand-new summaries. */
-  val SwapProtocolConf = "spark.graft.swap.protocol"
-
-  private def pointerProtocol(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption(SwapProtocolConf).contains("pointer")
-
-  /** Where summary `name` currently lives under `root` — the
-    * versioned layout's live version when present (either protocol
-    * may have written the store; detection is from the bytes, not the
-    * conf, so a pointer-written lexicon serves under any session). */
+  /** Where summary `name` currently lives under `root`: the live
+    * version of its [[graft.store.Versioned]] layout. */
   private[graft] def summaryPath(s: org.apache.spark.sql.SparkSession,
       root: String, name: String): String =
-    if (graft.store.Versioned.isVersioned(s, root, name))
-      graft.store.Versioned.current(s, root, name)
-    else s"$root/$name"
+    graft.store.Versioned.current(s, root, name)
 
-  /** Land summary `name` = `df` under the store's EXISTING layout when
-    * there is one, else the session's swap protocol: a store that is
-    * already pointer-managed stays pointer-managed regardless of the
-    * conf (writers mirror [[summaryPath]]'s byte-level detection —
-    * otherwise a conf-less session would write a plain directory NEXT
-    * to the versioned one while every reader keeps serving the stale
-    * versioned copy). The conf only chooses the layout for brand-new
-    * summaries. Fresh write or full rewrite, never a torn read. */
+  /** Land summary `name` = `df` as the next [[graft.store.Versioned]]
+    * version (safe on every filesystem): fresh write or full rewrite,
+    * never a torn read. */
   private def writeSummary(s: org.apache.spark.sql.SparkSession,
       root: String, name: String, df: DataFrame): Unit =
-    if (pointerProtocol(s) || graft.store.Versioned.isVersioned(s, root, name))
-      graft.store.Versioned.rewrite(s, root, name)(dir =>
-        df.coalesce(1).write.mode("overwrite").parquet(dir))
-    else if (!new org.apache.hadoop.fs.Path(s"$root/$name").getFileSystem(
-        s.sessionState.newHadoopConf())
-        .exists(new org.apache.hadoop.fs.Path(s"$root/$name"))) {
-      df.coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
-    } else {
-      df.coalesce(1).write.mode("overwrite").parquet(s"$root/$name.staging")
-      swapIn(s, root, name)
-    }
+    graft.store.Versioned.rewrite(s, root, name)(dir =>
+      df.coalesce(1).write.mode("overwrite").parquet(dir))
 
   def buildLexicon(docs: DataFrame, path: String,
       vocabCap: Int = VocabUncapped,
@@ -413,17 +381,14 @@ object Bm25 {
     // text read): the stats pass no longer re-tokenizes the corpus
     // (r19, guide §2.3/§6). A RESTRICTED vocabulary drops out-of-vocab
     // occurrences from the artifact, so those builds keep the direct
-    // tokenize pass (stats must count EVERY token). Summary order is
-    // postings → stats → df: the gate caches probe postings/_SUCCESS
-    // and the df summary, so df's presence still implies every
-    // summary landed (a production build is wrapped in the store
-    // Lease + staging swap either way).
-    // Explicit one-column schema on the read-back: a zero-token corpus
-    // writes a data-file-less postings dir, where schema INFERENCE
-    // fails before the stats summary lands; with the schema pinned the
-    // scan is simply empty and coalesce keeps sumdl = 0 (the value the
-    // direct pass would produce). Non-empty corpora read the identical
-    // tf longs, so the sum is bit-identical.
+    // tokenize pass (stats must count EVERY token).
+    // Explicit one-column schemas on both postings read-backs (stats
+    // here, df below): a zero-token corpus writes a data-file-less
+    // postings dir, where schema INFERENCE fails and the build never
+    // completes; with the schema pinned the scan is simply empty and
+    // coalesce keeps sumdl = 0 (the value the direct pass would
+    // produce), and df is an empty summary. Non-empty corpora read the
+    // identical columns, so the summaries are bit-identical.
     val stats =
       if (vocabTerms.isEmpty)
         docs.agg(count(lit(1)).as("n")).crossJoin(
@@ -442,7 +407,9 @@ object Bm25 {
     // of a corpus pass at any scale). Counts are identical: df(term)
     // == posting rows per term, and the artifact holds exactly
     // member(postings).
-    val dfTab = graft.sources.Sources.parquet(s, s"$path/postings")
+    val dfTab = s.read.schema(new org.apache.spark.sql.types.StructType()
+        .add("term", org.apache.spark.sql.types.StringType))
+      .parquet(s"$path/postings")
       .groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("df"))
     writeSummary(s, path, "df", dfTab)
@@ -468,62 +435,6 @@ object Bm25 {
     d.take(2).map(b => f"$b%02x").mkString.take(3)
   }
 
-  /** Two-metadata-rename swap of `$root/$name.staging` into
-    * `$root/$name`, through the Hadoop FileSystem API so the lexicon
-    * root can live on any scheme the cluster mounts — same
-    * restore-on-failure discipline as Dedup.compactStore; reference:
-    * dragnet keeps the analogous index state behind its Manta
-    * datasource, lib/datasource-manta.js. The never-torn guarantee
-    * rests on FileSystem.rename being a cheap metadata move, which
-    * holds for file:// and hdfs:// but NOT for object stores (s3a://
-    * renames are copy+delete — a crash mid-"rename" can leave a
-    * partial copy). On an object-store root set [[SwapProtocolConf]]
-    * to `pointer`: [[graft.store.Versioned]]'s committer-style layout
-    * (immutable version dirs + a one-line CURRENT pointer flipped by a
-    * single-FILE replace) is safe on every FS; readers auto-detect
-    * which layout a store uses. This directory swap remains the
-    * default where renames are atomic — it needs no version GC.
-    *
-    * SINGLE-WRITER: the swap (and the read-add-rewrite summary cycles
-    * around it) assumes one writer at a time. Mutating entry points
-    * claim the store through [[graft.store.Lease]] — a second
-    * concurrent writer gets a loud ConcurrentWriterException and
-    * retries after the holder finishes; a crashed holder's lease
-    * expires after `spark.graft.lease.ttlMs`. ConcurrencySpec drives
-    * the race. */
-  private[graft] def swapIn(s: org.apache.spark.sql.SparkSession, root: String,
-      name: String): Unit = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sessionState.newHadoopConf())
-    val live = new org.apache.hadoop.fs.Path(rootP, name)
-    val staging = new org.apache.hadoop.fs.Path(rootP, s"$name.staging")
-    val aside = new org.apache.hadoop.fs.Path(rootP, s"$name.aside")
-    // FileSystem.rename reports a missing/invalid source as EITHER a
-    // false return (HDFS) or a thrown FileNotFoundException
-    // (LocalFileSystem, FS-contract "HDFS-compatible" stores) — the
-    // restore branches below must run in both dialects, so failures
-    // normalize to false here (FileSystemSchemeSpec drives both).
-    // the thrown exception (which tells a missing source from
-    // disk-full/permission failures) rides along as the error's cause
-    var mvErr: Option[java.io.IOException] = None
-    def mv(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Boolean =
-      try fs.rename(src, dst)
-      catch { case e: java.io.IOException => mvErr = Some(e); false }
-    def fail(msg: String): Nothing = throw mvErr.fold(
-      new RuntimeException(msg))(e =>
-      new RuntimeException(s"$msg [last rename threw: $e]", e))
-    if (fs.exists(aside)) fs.delete(aside, true) // crashed-run leftover
-    if (!mv(live, aside))
-      fail(s"lexicon swap: cannot move $live aside — live untouched")
-    if (!mv(staging, live)) {
-      if (!mv(aside, live))
-        fail(s"lexicon swap: $name lost BOTH renames; aside=$aside")
-      fail(s"lexicon swap: staging rename failed; $name restored")
-    }
-    fs.delete(aside, true): Unit
-  }
-
   /**
    * Absorb a new crawl batch into an existing lexicon WITHOUT touching
    * what it already holds — the `dragnet build -u` move for the
@@ -533,7 +444,7 @@ object Bm25 {
    * the batch's postings for in-vocab terms APPEND into the term
    * directories, and the driver-size summaries update by pure integer
    * adds — df += batch df (new doc ids are disjoint, so counts add),
-   * n/sumdl likewise — rewritten via staging + two-rename swap so a
+   * n/sumdl likewise — each rewritten as a new summary version so a
    * crash never leaves a torn summary. Scale: the batch pays
    * tokenize+count on ITS rows only; nothing already indexed is read
    * or rewritten.
@@ -572,8 +483,8 @@ object Bm25 {
     // df merge is DISTRIBUTED (vocabulary-sized, never a driver
     // collect — the r18 uncapped default makes the vocabulary follow
     // the corpus): old summary LEFT JOIN batch delta, integer add.
-    // writeSummary stages then swaps, so the read of the old summary
-    // completes before the artifact moves.
+    // writeSummary lands a NEW version, so the read of the old
+    // summary never sees its own output.
     val dfDelta = batch.groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("d"))
     val dfOld = graft.sources.Sources.parquet(s, summaryPath(s, path, "df"))

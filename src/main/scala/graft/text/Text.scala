@@ -186,7 +186,10 @@ object Text {
     * pair, so best$i is empty) is a no-op — LEFT JOIN + coalesce keeps
     * cur_{i+1} = cur_i, mirroring the Scala early-exit; a CROSS JOIN
     * here would collapse the corpus state to zero rows on degenerate
-    * corpora and silently diverge from the Spark side. */
+    * corpora and silently diverge from the Spark side. Every round's
+    * state is MATERIALIZED: round i+1 reads round i's state twice
+    * (directly and through sym/pr/best), so an inlined chain doubles
+    * its work per merge. */
   private def bpeTrainCtes(base: String, merges: Int, passes: Int): String = {
     val init = "(' ' || coalesce(array_to_string(list_transform(" +
       "regexp_extract_all(lower(text), '[a-z]+'), " +
@@ -203,11 +206,11 @@ object Text {
          |    AND y[j] <> '' AND y[j+1] <> ''
          |  GROUP BY 1, 2),
          |best$i AS (SELECT a, b, c FROM pr$i ORDER BY c DESC, a, b LIMIT 1),
-         |cur${i + 1} AS (
+         |cur${i + 1} AS MATERIALIZED (
          |  SELECT doc_id, coalesce($rep, s$i) AS s${i + 1}
          |  FROM cur$i LEFT JOIN best$i bb ON TRUE)""".stripMargin
     }
-    s"""WITH cur0 AS (SELECT doc_id, $init AS s0 FROM $base),
+    s"""WITH cur0 AS MATERIALIZED (SELECT doc_id, $init AS s0 FROM $base),
        |${rounds.mkString(",\n")}""".stripMargin
   }
 

@@ -101,4 +101,19 @@ class ConcurrencySpec extends SparkSpec {
     assert(t4 != t3, "expired lease must be broken by a new claimant")
     Lease.release(spark, root, t4)
   }
+
+  test("a lease file whose payload is not yet written is a live lease") {
+    // a holder creates the lease file before it writes `token stamp`;
+    // a second writer that looks in between must not break the lease
+    val root = tmpDir("lease-empty")
+    val leaseFile = java.nio.file.Paths.get(root + ".graft-lease")
+    java.nio.file.Files.createFile(leaseFile)
+    intercept[ConcurrentWriterException] { Lease.acquire(spark, root) }
+    // the same empty file left by a holder that crashed before writing
+    // ages by its modification time and is broken after the TTL
+    java.nio.file.Files.setLastModifiedTime(leaseFile,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - Lease.DefaultTtlMs - 1000))
+    Lease.release(spark, root, Lease.acquire(spark, root))
+  }
 }

@@ -17,11 +17,9 @@ import graft.text.Bm25
   * executable proof: every root here is an EXPLICIT `file://` URI, so
   * each lifecycle resolves its FileSystem from the path's scheme (the
   * code path a `hdfs://` or `s3a://` root takes) rather than falling
-  * through java.io/default-FS behavior, and the lexicon swap's
-  * restore-on-failure branches are driven directly against that
-  * scheme-resolved FS. (Rename atomicity — and therefore the
-  * never-torn guarantee — holds for file:// and hdfs:// only; object
-  * stores need a committer-style layout, see Bm25.swapIn's doc.)
+  * through java.io/default-FS behavior, and the versioned-summary
+  * protocol (graft.store.Versioned) is driven through every crash state
+  * against that scheme-resolved FS.
   */
 class FileSystemSchemeSpec extends SparkSpec {
   import spark.implicits._
@@ -106,7 +104,7 @@ class FileSystemSchemeSpec extends SparkSpec {
     assert(keptB == Set(20L))
   }
 
-  test("lexicon build + incremental append (two-rename swaps) on an explicit file:// root") {
+  test("lexicon build + incremental append (versioned summaries) on an explicit file:// root") {
     val old = Seq(
       (1L, "spark merge fast table"),
       (2L, "merge merge slow"),
@@ -114,7 +112,7 @@ class FileSystemSchemeSpec extends SparkSpec {
     val batch = Seq((3L, "merge table table")).toDF("doc_id", "text")
     val inc = fileRoot("lex") + "/lexicon"
     Bm25.buildLexicon(old, inc)
-    Bm25.appendLexicon(spark, batch, inc) // two swapIn calls on file://
+    Bm25.appendLexicon(spark, batch, inc) // two summary versions on file://
     val full = fileRoot("lexfull") + "/lexicon"
     Bm25.buildLexicon(old.union(batch), full, vocabDocs = Some(old))
     val a = Bm25.bm25FromLexicon(spark, inc, 10, Seq("spark", "merge"))
@@ -122,10 +120,12 @@ class FileSystemSchemeSpec extends SparkSpec {
     val b = Bm25.bm25FromLexicon(spark, full, 10, Seq("spark", "merge"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a == b && a.nonEmpty)
-    // and no swap debris: neither staging nor aside dirs survive
+    // the summaries are pointer-managed: no plain directory beside them
     val fs = fsOf(inc)
-    for (n <- Seq("df", "stats"); suf <- Seq("staging", "aside"))
-      assert(!fs.exists(new Path(inc, s"$n.$suf")), s"$n.$suf left behind")
+    for (n <- Seq("df", "stats")) {
+      assert(fs.exists(new Path(inc, s"$n.CURRENT")), s"$n pointer missing")
+      assert(!fs.exists(new Path(inc, n)), s"plain $n directory written")
+    }
   }
 
   test("packed-shard artifact writes land on an explicit file:// root") {
@@ -143,46 +143,6 @@ class FileSystemSchemeSpec extends SparkSpec {
     val mToks = members.agg(sum(col("n_toks"))).head.getLong(0)
     val sToks = seqs.select(explode(col("tokens"))).count()
     assert(mToks == sToks && mToks > 0)
-  }
-
-  // --- swapIn failure branches, driven on the scheme-resolved FS ---
-
-  private def mkDirWithFile(fs: FileSystem, dir: Path, mark: String): Unit = {
-    fs.mkdirs(dir)
-    fs.create(new Path(dir, mark)).close()
-  }
-
-  test("swapIn sweeps a crashed run's aside dir, then lands the staging copy") {
-    val root = fileRoot("swap-ok")
-    val fs = fsOf(root)
-    mkDirWithFile(fs, new Path(root, "df"), "OLD")
-    mkDirWithFile(fs, new Path(root, "df.staging"), "NEW")
-    mkDirWithFile(fs, new Path(root, "df.aside"), "CRASH_LEFTOVER")
-    Bm25.swapIn(spark, root, "df")
-    assert(fs.exists(new Path(root, "df/NEW")), "staging content must be live")
-    assert(!fs.exists(new Path(root, "df/OLD")))
-    assert(!fs.exists(new Path(root, "df.staging")))
-    assert(!fs.exists(new Path(root, "df.aside")), "aside must be released")
-  }
-
-  test("swapIn with staging missing restores the live copy and reports") {
-    val root = fileRoot("swap-restore")
-    val fs = fsOf(root)
-    mkDirWithFile(fs, new Path(root, "df"), "OLD")
-    val e = intercept[RuntimeException](Bm25.swapIn(spark, root, "df"))
-    assert(e.getMessage.contains("restored"))
-    assert(fs.exists(new Path(root, "df/OLD")), "live copy must be restored")
-    assert(!fs.exists(new Path(root, "df.aside")), "no torn aside state")
-  }
-
-  test("swapIn with live missing fails fast and leaves staging intact") {
-    val root = fileRoot("swap-nolive")
-    val fs = fsOf(root)
-    mkDirWithFile(fs, new Path(root, "df.staging"), "NEW")
-    val e = intercept[RuntimeException](Bm25.swapIn(spark, root, "df"))
-    assert(e.getMessage.contains("live untouched"))
-    assert(fs.exists(new Path(root, "df.staging/NEW")),
-      "staging must survive for a retry")
   }
 
   // ---- the pointer-file (committer-style) protocol: the object-store
@@ -277,57 +237,5 @@ class FileSystemSchemeSpec extends SparkSpec {
     assert(readV(Versioned.current(spark, root, "df")) == Set(("recovered", 3L)))
     assert(Option(fs.globStatus(new Path(root, "df.v*.INPROGRESS")))
       .getOrElse(Array.empty).isEmpty, "committed store carries no markers")
-  }
-
-  test("conf-less rewrite of a pointer-managed summary stays pointer-managed") {
-    // the writer mirrors the reader's byte-level layout detection: a
-    // session WITHOUT spark.graft.swap.protocol=pointer appending to a
-    // pointer-written lexicon must rewrite the versioned store, not
-    // drop a plain directory beside it that readers would ignore
-    val old = Seq(
-      (1L, "spark merge fast table"),
-      (2L, "merge merge slow")).toDF("doc_id", "text")
-    val batch = Seq((3L, "merge table table")).toDF("doc_id", "text")
-    val root = fileRoot("lex-mixed") + "/lexicon"
-    spark.conf.set(Bm25.SwapProtocolConf, "pointer")
-    try Bm25.buildLexicon(old, root)
-    finally spark.conf.unset(Bm25.SwapProtocolConf)
-    Bm25.appendLexicon(spark, batch, root) // conf-less session
-    val fs = fsOf(root)
-    assert(!fs.exists(new Path(root, "df")) && !fs.exists(new Path(root, "stats")),
-      "no plain directory may shadow the versioned store")
-    // and the append is VISIBLE to readers (stats rewrote in place):
-    // n grew 2 → 3 under the pointer layout
-    val st = spark.read.parquet(Bm25.summaryPath(spark, root, "stats"))
-      .collect().head
-    assert(st.getLong(st.fieldIndex("n")) == 3L,
-      "appendLexicon must land in the layout readers detect")
-  }
-
-  test("lexicon lifecycle under the pointer protocol equals the rename twin") {
-    val old = Seq(
-      (1L, "spark merge fast table"),
-      (2L, "merge merge slow"),
-      (4L, "spark spark spark scan")).toDF("doc_id", "text")
-    val batch = Seq((3L, "merge table table")).toDF("doc_id", "text")
-    val ptr = fileRoot("lex-ptr") + "/lexicon"
-    spark.conf.set(Bm25.SwapProtocolConf, "pointer")
-    try {
-      Bm25.buildLexicon(old, ptr)
-      Bm25.appendLexicon(spark, batch, ptr)
-    } finally spark.conf.unset(Bm25.SwapProtocolConf)
-    val fs = fsOf(ptr)
-    assert(fs.exists(new Path(ptr, "df.CURRENT")), "pointer layout used")
-    assert(!fs.exists(new Path(ptr, "df")), "no plain dir under pointer")
-    // a DIFFERENT session config (rename default) still reads it:
-    // layout detection is from the bytes, not the conf
-    val ren = fileRoot("lex-ren") + "/lexicon"
-    Bm25.buildLexicon(old, ren)
-    Bm25.appendLexicon(spark, batch, ren)
-    val a = Bm25.bm25FromLexicon(spark, ptr, 10, Seq("spark", "merge"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = Bm25.bm25FromLexicon(spark, ren, 10, Seq("spark", "merge"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(a == b && a.nonEmpty)
   }
 }

@@ -179,8 +179,9 @@ class RetrievalSpec extends SparkSpec {
     Bm25.buildLexicon(old.union(batch), full, vocabDocs = Some(old))
 
     def slurp(root: String, part: String, cols: Seq[String]) =
-      spark.read.parquet(s"$root/$part").select(cols.map(col): _*)
-        .collect().map(_.toSeq).toSet
+      spark.read.parquet(if (part == "postings") s"$root/$part"
+          else Bm25.summaryPath(spark, root, part))
+        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
     assert(slurp(inc, "stats", Seq("n", "sumdl")) ==
       slurp(full, "stats", Seq("n", "sumdl")))
     assert(slurp(inc, "df", Seq("term", "df")) ==
@@ -206,19 +207,19 @@ class RetrievalSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("lexicon swap: staged summary survives; a crashed aside is swept") {
+  test("lexicon append lands a new summary version; the previous one stays readable") {
     val docs = Seq((0L, "alpha beta"), (1L, "beta gamma")).toDF("doc_id", "text")
     val root = tmpDir("lexswap")
     Bm25.buildLexicon(docs, root)
-    // plant a leftover aside dir from a "crashed" prior run
-    val aside = new java.io.File(root, "df.aside")
-    aside.mkdirs()
-    new java.io.File(aside, "junk").createNewFile()
+    val before = Bm25.summaryPath(spark, root, "df")
     Bm25.appendLexicon(spark, Seq((2L, "beta beta")).toDF("doc_id", "text"), root)
-    assert(!aside.exists(), "leftover aside must be swept by the swap")
-    val df = spark.read.parquet(s"$root/df").collect()
+    val after = Bm25.summaryPath(spark, root, "df")
+    assert(after != before, "append must land a new version")
+    def dfOf(p: String) = spark.read.parquet(p).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(df("beta") == 3L && df("alpha") == 1L)
+    assert(dfOf(after)("beta") == 3L && dfOf(after)("alpha") == 1L)
+    // an in-flight reader that resolved the old pointer still reads it
+    assert(dfOf(before)("beta") == 2L)
   }
 
   // ---- known-item recall gates (SURVEY row 101) -----------------------

@@ -17,11 +17,12 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      // per-JVM warehouse: suites run in concurrently forked JVM groups
-      // (build.sbt Test/testGrouping), and bucketed-table writes from
-      // two groups must not collide on one fixed path
+      // per-group warehouse: suites run in concurrently forked JVM
+      // groups (build.sbt Test/testGrouping), each with its own
+      // graft.tmp.root, so bucketed-table writes from two groups never
+      // collide, and a group reuses its one directory run after run
       .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-test-warehouse-${ProcessHandle.current().pid()}")
+        s"${graft.tools.LocalFs.TmpRoot}/graft-test-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
