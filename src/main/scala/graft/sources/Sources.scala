@@ -9,48 +9,87 @@ import org.apache.spark.sql.functions._
  * lib/datasource-file.js, lib/fs-find.js, lib/path-enum.js). On Spark the
  * same roles are played by `spark.read.json` (nested structs ≡ dotted field
  * paths), parquet, and partition pruning on a date-derived column.
+ *
+ * Schema memo. Spark infers a JSON or parquet schema with a job of its own
+ * that reads every selected ndjson byte (or every parquet footer) before
+ * the query reads them again. Every read here goes through [[memoRead]],
+ * which infers each selection's schema once and hands it to the reader
+ * afterwards:
+ *  - Key: the format and the selected path list, qualified.
+ *  - Stamp: a digest of (path, length, mtime) of every file under those
+ *    paths, listed recursively with the Hadoop FS API, so it works on
+ *    every scheme and is metadata only.
+ *  - One generation per key: a changed stamp (a file appended in place,
+ *    added, removed or rewritten) re-infers and replaces the entry.
+ *  - The memoized schema is what inference over that same selection
+ *    returns, so a frame, its answers and its DROPMALFORMED drops are
+ *    those of a plain read. A pruned selection keeps its own types; no
+ *    schema is widened over the whole root.
+ *  - An FS probe failure falls back to plain inference.
+ *  - The memo lives in this JVM: a long-lived process (dashboards, a
+ *    Spark application that scans and builds over one tree) gains; a
+ *    one-shot `dn` CLI process still infers once per selection.
+ *  - Known gap: a rewrite that keeps a file's length within the
+ *    filesystem's mtime granularity keeps its stamp, so the old schema is
+ *    served until the stamp moves.
+ * Only schemas are memoized, never rows or file listings: every query
+ * still reads its data from the files.
  */
 object Sources {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.DataFrameReader
+  import org.apache.spark.sql.types.StructType
 
-  /** Schema METADATA cache for [[parquet]] — (qualified path →
-    * (mtime, schema)). Only the StructType is cached, never rows or
-    * file listings: every query still reads its data from the parquet
-    * bytes. Rationale (r19, guide §6): `spark.read.parquet` re-infers
-    * the schema from file footers on EVERY call — a driver-side
-    * footer-read job per query per table (measured ~130 ms at sf0.1,
-    * and at 100 TB inference touches every file's footer). Production
-    * engines serve schemas from catalog metadata (Hive/Iceberg); this
-    * cache is that move for the path-addressed layout. Invalidation:
-    * the path's modification time — a rebuilt or swapped artifact
-    * re-infers (two-rename swaps and fresh builds both touch the
-    * root's mtime); appends into an existing layout keep the schema by
-    * contract (appendLexicon/store appends are schema-detected against
-    * the store they extend). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Long, org.apache.spark.sql.types.StructType)]()
+  /** (format, qualified paths) → (stamp, schema). */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]),
+      (String, StructType)]()
 
-  /** `spark.read.parquet(path)` with the inferred schema memoized per
-    * (path, mtime) — identical frame, no per-call footer job. Falls
-    * back to plain inference on any FS probe failure. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val st = fs.getFileStatus(p)
-      val key = fs.makeQualified(p).toString
-      val mt = st.getModificationTime
-      val hit = schemaCache.get(key)
-      val sch = if (hit != null && hit._1 == mt) hit._2
-      else {
-        val s0 = spark.read.parquet(path).schema
-        schemaCache.put(key, (mt, s0))
-        s0
+  /** `load(reader)` over `paths`, given its schema from [[schemaMemo]]
+    * on a hit; a miss returns the plain inferring read and memoizes its
+    * schema (see the memo contract above). */
+  private def memoRead(spark: SparkSession, format: String,
+      paths: Seq[String], reader: DataFrameReader)(
+      load: DataFrameReader => DataFrame): DataFrame = {
+    val probe = try {
+      val conf = spark.sessionState.newHadoopConf()
+      val files = Seq.newBuilder[String]
+      val keys = paths.map { s =>
+        val p = new Path(s)
+        val fs = p.getFileSystem(conf)
+        // listStatus, not listFiles: a LocatedFileStatus reads each
+        // file's permissions, which the local FS without the native
+        // Hadoop library does by forking a process per file (~100 ms
+        // for a 24-file day directory, against ~2 ms here)
+        def walk(q: Path): Unit = fs.listStatus(q).foreach { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else files += s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}"
+        }
+        walk(p)
+        fs.makeQualified(p).toString
       }
-      spark.read.schema(sch).parquet(path)
-    } catch {
-      case _: java.io.IOException => spark.read.parquet(path)
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.result().sorted.foreach(f =>
+        md.update((f + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      Some(((format, keys), java.util.HexFormat.of().formatHex(md.digest())))
+    } catch { case _: java.io.IOException => None }
+    probe match {
+      case Some((key, stamp)) =>
+        val hit = schemaMemo.get(key)
+        if (hit != null && hit._1 == stamp) load(reader.schema(hit._2))
+        else {
+          val df = load(reader)
+          // a selection with no inferred column keeps plain inference
+          if (df.schema.nonEmpty) schemaMemo.put(key, (stamp, df.schema))
+          df
+        }
+      case None => load(reader)
     }
+  }
+
+  /** `spark.read.parquet(path)` with its schema memoized. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    memoRead(spark, "parquet", Seq(path), spark.read)(_.parquet(path))
 
   /** Read a testdata star-schema table. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -82,11 +121,6 @@ object Sources {
       .drop("k_json")
   }
 
-  /**
-   * Newline-separated JSON datasource — dragnet's native format
-   * (README.md:33). Schema inference handles nested objects; dotted paths
-   * (`req.method`) then resolve as struct field access.
-   */
   /** Options mirroring the reference reader's behavior (lib/fs-find.js
     * + bin/dn warn-and-skip): walk the datasource tree RECURSIVELY (a
     * path-only datasource-add scans nested `%Y/%m-%d` layouts without
@@ -96,8 +130,18 @@ object Sources {
   private val NdjsonOpts =
     Map("recursiveFileLookup" -> "true", "mode" -> "DROPMALFORMED")
 
+  /** The one ndjson reader: every JSON read of the datasource layer. */
+  private def readNdjson(spark: SparkSession, paths: Seq[String]): DataFrame =
+    memoRead(spark, "json", paths, spark.read.options(NdjsonOpts))(
+      _.json(paths: _*))
+
+  /**
+   * Newline-separated JSON datasource — dragnet's native format
+   * (README.md:33). Schema inference handles nested objects; dotted paths
+   * (`req.method`) then resolve as struct field access.
+   */
   def ndjson(spark: SparkSession, path: String): DataFrame =
-    spark.read.options(NdjsonOpts).json(path)
+    readNdjson(spark, Seq(path))
 
   /**
    * Read dragnet's json-skinner point format — ndjson of
@@ -106,10 +150,8 @@ object Sources {
    * parserFor) — flattened to record columns plus the `value` weight.
    * Scan with `valueField = Some("value")` re-aggregates losslessly.
    */
-  def skinnerPoints(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.options(NdjsonOpts).json(path)
-    raw.select(col("fields.*"), col("value"))
-  }
+  def skinnerPoints(spark: SparkSession, path: String): DataFrame =
+    readNdjson(spark, Seq(path)).select(col("fields.*"), col("value"))
 
   /**
    * General strftime path layout (reference: lib/path-enum.js supports
@@ -124,8 +166,14 @@ object Sources {
    */
   def timeFormatDirs(spark: SparkSession, root: String, pattern: String,
       after: Option[java.time.Instant], before: Option[java.time.Instant])
-      : Seq[(java.time.Instant, String)] = {
-    import org.apache.hadoop.fs.Path
+      : Seq[(java.time.Instant, String)] =
+    walkLayout(spark, root, pattern).filter(overlaps(after, before))
+      .map { case (start, _, p) => (start, p) }
+
+  /** Every leaf directory of `pattern` under `root` as (interval start,
+    * interval end, path), sorted by time. */
+  private def walkLayout(spark: SparkSession, root: String, pattern: String)
+      : Seq[(java.time.Instant, java.time.Instant, String)] = {
     val segSpecs: Seq[(scala.util.matching.Regex, Seq[Char])] =
       pattern.split("/").toSeq.map { seg =>
         val sb = new StringBuilder
@@ -170,34 +218,38 @@ object Sources {
         }
       }
     }
-    val dirs = frontier.flatMap { case (p, v) =>
+    frontier.flatMap { case (p, v) =>
       try {
         val start = java.time.LocalDateTime.of(
           v('Y'), v.getOrElse('m', 1), v.getOrElse('d', 1),
           v.getOrElse('H', 0), 0)
           .toInstant(java.time.ZoneOffset.UTC)
-        Some((start, p.toString))
+        val end = start.atZone(java.time.ZoneOffset.UTC).plus(granularity)
+          .toInstant
+        Some((start, end, p.toString))
       } catch { case _: java.time.DateTimeException => None } // e.g. month 13
-    }
-    dirs.filter { case (start, _) =>
-      val end = start.atZone(java.time.ZoneOffset.UTC).plus(granularity)
-        .toInstant
-      after.forall(a => end.isAfter(a)) && before.forall(b => start.isBefore(b))
     }.sortBy(_._1)
   }
 
+  private def overlaps(after: Option[java.time.Instant],
+      before: Option[java.time.Instant])(
+      d: (java.time.Instant, java.time.Instant, String)): Boolean =
+    after.forall(a => d._2.isAfter(a)) && before.forall(b => d._1.isBefore(b))
+
   /**
    * Read any strftime-pattern ndjson layout, scanning ONLY directories
-   * overlapping [after, before); schema-preserving empty frame when all
-   * are pruned (like [[dateLayout]]).
+   * that overlap [after, before). The tree is walked once. When every
+   * directory is pruned, the frame is empty but keeps the schema of the
+   * earliest directory (limit 0), so downstream scans still resolve their
+   * columns and return zero rows instead of failing analysis.
    */
   def timeFormatLayout(spark: SparkSession, root: String, pattern: String,
       after: Option[java.time.Instant] = None,
       before: Option[java.time.Instant] = None): DataFrame = {
-    val dirs = timeFormatDirs(spark, root, pattern, after, before).map(_._2)
-    if (dirs.nonEmpty) spark.read.options(NdjsonOpts).json(dirs: _*)
-    else timeFormatDirs(spark, root, pattern, None, None).map(_._2) match {
-      case all if all.nonEmpty => spark.read.options(NdjsonOpts).json(all.head).limit(0)
+    val all = walkLayout(spark, root, pattern)
+    all.filter(overlaps(after, before)).map(_._3) match {
+      case dirs if dirs.nonEmpty => readNdjson(spark, dirs)
+      case _ if all.nonEmpty => readNdjson(spark, Seq(all.head._3)).limit(0)
       case _ => spark.emptyDataFrame
     }
   }
@@ -214,21 +266,9 @@ object Sources {
       (t.atZone(java.time.ZoneOffset.UTC).toLocalDate, p)
     }
 
-  /**
-   * Read a `%Y/%m-%d` ndjson dataset, scanning ONLY day directories that
-   * overlap [after, before). When every day is pruned, the frame is
-   * empty but keeps the dataset's schema (inferred from one unpruned
-   * directory, limit 0) so downstream scans still resolve their columns
-   * and return zero rows instead of failing analysis.
-   */
+  /** A `%Y/%m-%d` ndjson dataset through [[timeFormatLayout]]. */
   def dateLayout(spark: SparkSession, root: String,
       after: Option[java.time.Instant] = None,
-      before: Option[java.time.Instant] = None): DataFrame = {
-    val dirs = dateLayoutDirs(spark, root, after, before).map(_._2)
-    if (dirs.nonEmpty) spark.read.options(NdjsonOpts).json(dirs: _*)
-    else dateLayoutDirs(spark, root, None, None).map(_._2) match {
-      case all if all.nonEmpty => spark.read.options(NdjsonOpts).json(all.head).limit(0)
-      case _ => spark.emptyDataFrame
-    }
-  }
+      before: Option[java.time.Instant] = None): DataFrame =
+    timeFormatLayout(spark, root, "%Y/%m-%d", after, before)
 }

@@ -18,8 +18,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * Cache contract ([[cached]], the one artifact cache of the query
   * layer):
-  *  - Key: `$TmpRoot/graft-<kind>/<dirKey>-<fp>[-tag]`. `dirKey` is the
-  *    source dir with every non-`[A-Za-z0-9.]` char mapped to `_`;
+  *  - Key: `$TmpRoot/graft-<kind>/<dirKey>-<fp>[-tag]`. `dirKey` is `d`
+  *    and the source dir with every non-`[A-Za-z0-9.]` char mapped to
+  *    `_` (`/abs/dir` → `d_abs_dir`), so no artifact is hidden from Spark;
   *    `fp` is a content fingerprint (length ⊕ mtime) of the source
   *    inputs, so a regenerated dataset REBUILDS instead of serving
   *    artifacts derived from dead data, and two dirs whose sanitized
@@ -51,7 +52,8 @@ object LocalFs {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private def dirKey(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
+  private def dirKey(dir: String): String =
+    "d" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Where [[cached]] keeps the artifact of `kind` built from `inputs`
     * (file or directory names under `dir`). */

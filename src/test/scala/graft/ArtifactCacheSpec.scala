@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.scalatest.BeforeAndAfterAll
-
 import graft.text.Bm25
 import graft.tools.LocalFs
 
@@ -12,16 +10,10 @@ import graft.tools.LocalFs
   * build is served only once committed, a changed input rebuilds and
   * sweeps only its own stale generation, and one key builds once under
   * concurrent callers. */
-class ArtifactCacheSpec extends SparkSpec with BeforeAndAfterAll {
+class ArtifactCacheSpec extends SparkSpec {
   import spark.implicits._
 
-  private val made = scala.collection.mutable.ArrayBuffer[Path]()
-
-  private def tmpDir(tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft-cache-$tag")
-    made += dir
-    dir.toString
-  }
+  private def tmpDir(tag: String): String = tempDir(s"graft-cache-$tag").toString
 
   /** A fresh source dir holding one input file `src.bin`. */
   private def sourceDir(tag: String): String = {
@@ -31,9 +23,8 @@ class ArtifactCacheSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    (made ++ Seq("spec", "spec-lexicon")
-        .map(k => Paths.get(s"${LocalFs.TmpRoot}/graft-$k")))
-      .foreach(LocalFs.deleteRec)
+    Seq("spec", "spec-lexicon")
+      .foreach(k => LocalFs.deleteRec(Paths.get(s"${LocalFs.TmpRoot}/graft-$k")))
     super.afterAll()
   }
 
@@ -118,5 +109,14 @@ class ArtifactCacheSpec extends SparkSpec with BeforeAndAfterAll {
     val st = spark.read.parquet(Bm25.summaryPath(spark, root, "stats")).head()
     assert((st.getAs[Long]("n"), st.getAs[Long]("sumdl")) == ((3L, 0L)))
     assert(spark.read.parquet(Bm25.summaryPath(spark, root, "df")).count() == 0L)
+  }
+
+  test("an artifact path for an absolute source dir is not hidden from Spark") {
+    def name(dir: String) = Paths.get(LocalFs.path("spec", dir, Nil)).getFileName.toString
+    for (dir <- Seq("/abs/dir", "./rel", "_x")) {
+      assert(!name(dir).startsWith("_") && !name(dir).startsWith("."), name(dir))
+    }
+    // the sweep reads `<dirKey>-<fp>`: a `-` in the source dir stays out of the key
+    assert(name("/abs/my-dir").count(_ == '-') == 1, name("/abs/my-dir"))
   }
 }

@@ -20,8 +20,7 @@ import graft.text.Bm25
 class ConcurrencySpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-conc-$tag").toString
+  private def tmpDir(tag: String): String = tempDir(s"graft-conc-$tag").toString
 
   test("ten latch-started appendLexicon races: one winner per round, " +
       "losers fail loudly and a retry converges to the serial result") {

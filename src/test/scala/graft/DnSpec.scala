@@ -11,7 +11,7 @@ class DnSpec extends SparkSpec {
   // a copy with a standard TIMESTAMP(MICROS) ts — the testdata file uses
   // TIMESTAMP(NANOS), which only Sources.events knows how to rebuild
   private lazy val events: String = {
-    val dir = Files.createTempDirectory("graft-dn-events").toString
+    val dir = tempDir("graft-dn-events").toString
     graft.sources.Sources.events(spark, sf001)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     s"$dir/events.parquet"
@@ -34,7 +34,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("build + query round-trips through a default metric") {
-    val idx = Files.createTempDirectory("graft-dn-index").toString
+    val idx = tempDir("graft-dn-index").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
       "--breakdowns=event_type,user_id", "--time-field=ts"))
     val viaIndex = Dn.run(spark, Seq("query", s"--index=$idx",
@@ -46,7 +46,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("compact rewrites fragmented metric trees and query is unchanged") {
-    val idx = Files.createTempDirectory("graft-dn-compact").toString
+    val idx = tempDir("graft-dn-compact").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
       "--breakdowns=event_type,user_id", "--time-field=ts"))
     // fragment one day: append a duplicate file into its directory
@@ -76,7 +76,7 @@ class DnSpec extends SparkSpec {
   test("compact auto-detects an hourly-only tree; explicit wrong interval fails loudly") {
     // hourly-only index: the old --interval default ("day") listed
     // by_day/, found nothing, and silently no-opped
-    val idx = Files.createTempDirectory("graft-dn-compact-hr").toString
+    val idx = tempDir("graft-dn-compact-hr").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
       "--breakdowns=event_type", "--time-field=ts", "--interval=hour"))
     // fragment one day of the HOURLY tree; compact with NO --interval
@@ -114,7 +114,7 @@ class DnSpec extends SparkSpec {
     // feed the points back 3x as json-skinner, counts triple
     val pts = Dn.run(spark, Seq("scan", s"--data=$events",
       "--breakdowns=event_type,user_id", "--points"))
-    val dir = Files.createTempDirectory("graft-skinner")
+    val dir = tempDir("graft-skinner")
     val lines = pts.toJSON.collect()
     Files.writeString(dir.resolve("points.ndjson"),
       (lines ++ lines ++ lines).mkString("\n") + "\n")
@@ -156,7 +156,7 @@ class DnSpec extends SparkSpec {
     // one record per drop shape, plus a clean one and a NORMAL filter
     // miss (present field, predicate false) which must NOT warn —
     // reference: krill-skinner-stream.js warns on eval failure only
-    val data = Files.createTempDirectory("graft-dn-warn").resolve("w.ndjson")
+    val data = tempDir("graft-dn-warn").resolve("w.ndjson")
     Files.writeString(data, Seq(
       """{"lvl":"debug","time":"2024-01-05T00:00:00Z","latency":"5"}""",
       """{"time":"2024-01-05T00:00:00Z","latency":"5"}""",
@@ -201,7 +201,7 @@ class DnSpec extends SparkSpec {
     // a positional is a datasource name — unknown ones fail at resolution
     assertThrows[GraftException](
       Dn.run(spark, Seq("scan", "nosuchds"),
-        Files.createTempDirectory("graft-noconf").resolve("rc")))
+        tempDir("graft-noconf").resolve("rc")))
     assertThrows[GraftException](Dn.run(spark, Seq("scan")))
     assertThrows[GraftException](Dn.run(spark, Seq("build", s"--data=$events")))
     // a typo'd flag must error, not silently compute the unfiltered answer
@@ -213,7 +213,7 @@ class DnSpec extends SparkSpec {
     // reference tests/dn/local/tst.empty.sh: every operation over
     // /dev/null yields 0 / empty output — including breakdowns on
     // fields no record ever carried, and a query over an empty build
-    val empty = Files.createTempDirectory("graft-dn-empty")
+    val empty = tempDir("graft-dn-empty")
       .resolve("e.ndjson")
     Files.writeString(empty, "")
     assert(Dn.run(spark, Seq("scan", s"--data=$empty")).collect()
@@ -223,7 +223,7 @@ class DnSpec extends SparkSpec {
     assert(Dn.run(spark, Seq("scan", s"--data=$empty", "--counters",
       """--filter={"eq": ["audit", true]}""")).collect()
       .head.toSeq == Seq(0L, 0L, 0L, 0L, 0L))
-    val idx = Files.createTempDirectory("graft-dn-emptyidx").toString
+    val idx = tempDir("graft-dn-emptyidx").toString
     Dn.run(spark, Seq("build", s"--data=$empty", s"--index=$idx",
       "--time-field=time", "--breakdowns=req.method"))
     assert(Dn.run(spark, Seq("query", s"--index=$idx",
@@ -247,7 +247,7 @@ class DnSpec extends SparkSpec {
     // reference tst.index_file.sh indexes req.caller/req.method — the
     // breakdown NAME keeps its dots and becomes a flat index column;
     // query-side resolution must quote it, not re-parse it as a path
-    val idx = Files.createTempDirectory("graft-dn-dotidx").toString
+    val idx = tempDir("graft-dn-dotidx").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
       "--breakdowns=props.k,event_type", "--time-field=ts"))
     val viaIndex = Dn.run(spark, Seq("query", s"--index=$idx",
@@ -320,7 +320,7 @@ class DnSpec extends SparkSpec {
 
   // ------------------------------------------------------ config-backed CLI
 
-  private def tmpConfig = Files.createTempDirectory("graft-rc").resolve("rc")
+  private def tmpConfig = tempDir("graft-rc").resolve("rc")
 
   test("datasource CRUD round-trips through the config file") {
     val rc = tmpConfig
@@ -370,7 +370,7 @@ class DnSpec extends SparkSpec {
     // trivial filter {} round-trips
     Dn.runConfig(Seq("datasource-update", "--filter={}", "ev"), rc)
     // a corrupt config file errors cleanly, not with a parser stack
-    val bad = Files.createTempDirectory("graft-badrc").resolve("rc")
+    val bad = tempDir("graft-badrc").resolve("rc")
     Files.writeString(bad, "{ not json")
     assertThrows[GraftException](Dn.runConfig(Seq("datasource-list"), bad))
     assertThrows[GraftException](Dn.runConfig(
@@ -387,7 +387,7 @@ class DnSpec extends SparkSpec {
   test("named datasource: scan applies the standing filter; build/query " +
       "use configured metrics; index-read/index-scan expose the tuples") {
     val rc = tmpConfig
-    val idx = Files.createTempDirectory("graft-dn-dsidx").toString
+    val idx = tempDir("graft-dn-dsidx").toString
     Dn.runConfig(Seq("datasource-add", s"--path=$events",
       s"--index-path=$idx", "--time-field=ts", "--data-format=parquet",
       """--filter={"ne": ["event_type", "error"]}""", "ev"), rc)
@@ -436,7 +436,7 @@ class DnSpec extends SparkSpec {
 
   test("datasource time-format reads the %Y/%m-%d tree and prunes by day") {
     val rc = tmpConfig
-    val root = Files.createTempDirectory("graft-dn-tree")
+    val root = tempDir("graft-dn-tree")
     def put(day: String, lines: Seq[String]): Unit = {
       val dir = root.resolve(day)
       Files.createDirectories(dir)
@@ -467,7 +467,7 @@ class DnSpec extends SparkSpec {
     // the standing filter is baked in at build time; query must not
     // re-apply it (its field isn't an indexed breakdown)
     val rc = tmpConfig
-    val idx = Files.createTempDirectory("graft-dn-nf").toString
+    val idx = tempDir("graft-dn-nf").toString
     Dn.runConfig(Seq("datasource-add", s"--path=$events",
       s"--index-path=$idx", "--time-field=ts", "--data-format=parquet",
       """--filter={"gt": ["value", 10]}""", "ev3"), rc)
@@ -483,7 +483,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("query --counters and --points mirror the scan-side modes") {
-    val idx = Files.createTempDirectory("graft-dn-qc").toString
+    val idx = tempDir("graft-dn-qc").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
       "--breakdowns=event_type,user_id", "--time-field=ts"))
     // counters over the index: value-weighted, everything aggregates
@@ -508,7 +508,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("build --dry-run plans the index tuples without writing") {
-    val idx = Files.createTempDirectory("graft-dn-dry").toString + "/sub"
+    val idx = tempDir("graft-dn-dry").toString + "/sub"
     val planned = Dn.run(spark, Seq("build", s"--data=$events",
       s"--index=$idx", "--breakdowns=event_type", "--time-field=ts",
       "--dry-run"))
@@ -519,7 +519,7 @@ class DnSpec extends SparkSpec {
 
   test("day and hour indexes coexist under one root; --interval selects") {
     val rc = tmpConfig
-    val idx = Files.createTempDirectory("graft-dn-iv").toString
+    val idx = tempDir("graft-dn-iv").toString
     Dn.runConfig(Seq("datasource-add", s"--path=$events",
       s"--index-path=$idx", "--time-field=ts", "--data-format=parquet",
       "ev2"), rc)
@@ -546,7 +546,7 @@ class DnSpec extends SparkSpec {
 
   test("arbitrary strftime layouts: %Y/%m/%d/%H prunes to the hour") {
     val rc = tmpConfig
-    val root = Files.createTempDirectory("graft-dn-hourly")
+    val root = tempDir("graft-dn-hourly")
     def put(dir: String, lines: Seq[String]): Unit = {
       val d = root.resolve(dir)
       Files.createDirectories(d)
@@ -590,7 +590,7 @@ class DnSpec extends SparkSpec {
     val pts = Dn.run(spark, Seq("scan", s"--data=$events",
       "--breakdowns=event_type,day[date,field=ts,aggr=lquantize,step=86400]",
       "--points"))
-    val dir = Files.createTempDirectory("graft-skinner-build")
+    val dir = tempDir("graft-skinner-build")
     val lines = pts.toJSON.collect()
     Files.writeString(dir.resolve("points.ndjson"),
       (lines ++ lines ++ lines).mkString("\n") + "\n")
@@ -613,12 +613,12 @@ class DnSpec extends SparkSpec {
     // file's metrics must drive the build, and a query of the result
     // must match a plain scan.
     val rc = tmpConfig
-    val idx = Files.createTempDirectory("graft-dn-icidx").toString
+    val idx = tempDir("graft-dn-icidx").toString
     Dn.runConfig(Seq("datasource-add", s"--path=$events",
       s"--index-path=$idx", "ev"), rc)
     Dn.runConfig(Seq("metric-add", "--breakdowns=event_type,user_id",
       """--filter={"ne": ["event_type", "error"]}""", "ev", "by_tu"), rc)
-    val cfgFile = Files.createTempDirectory("graft-ixcfg").resolve("ic.json")
+    val cfgFile = tempDir("graft-ixcfg").resolve("ic.json")
     Files.writeString(cfgFile, Dn.runConfig(Seq("index-config", "ev"), rc))
     // parsed metrics round-trip name, breakdowns, and filter
     val ms = Dn.indexConfigMetrics(cfgFile.toString)
@@ -642,7 +642,7 @@ class DnSpec extends SparkSpec {
       Dn.parseArgs(Seq("scan", "--data=x", s"--index-config=$cfgFile")))
     // unreadable / malformed files error cleanly
     assertThrows[GraftException](Dn.indexConfigMetrics("/nonexistent.json"))
-    val bad = Files.createTempDirectory("graft-ixcfg-bad").resolve("bad.json")
+    val bad = tempDir("graft-ixcfg-bad").resolve("bad.json")
     Files.writeString(bad, "{ not json")
     assertThrows[GraftException](Dn.indexConfigMetrics(bad.toString))
   }
@@ -657,7 +657,7 @@ class DnSpec extends SparkSpec {
       """--filter={"eq": ["event_type", "click"]}""", "ev"), rc)
     Dn.runConfig(Seq("metric-add", "--breakdowns=event_type",
       "ev", "by_t"), rc)
-    val cfgFile = Files.createTempDirectory("graft-ixsc").resolve("ic.json")
+    val cfgFile = tempDir("graft-ixsc").resolve("ic.json")
     Files.writeString(cfgFile, Dn.runConfig(Seq("index-config", "ev"), rc))
     // the emitted config carries the datasource and its filter
     assert(Dn.indexConfigDsFilter(cfgFile.toString)
@@ -676,7 +676,7 @@ class DnSpec extends SparkSpec {
     node.get("datasource")
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       .remove("filter")
-    val noFilter = Files.createTempDirectory("graft-ixsc2").resolve("nf.json")
+    val noFilter = tempDir("graft-ixsc2").resolve("nf.json")
     Files.writeString(noFilter, mapper.writeValueAsString(node))
     assert(Dn.indexConfigDsFilter(noFilter.toString).isEmpty)
     val unfiltered = Dn.run(spark, Seq("index-scan", s"--time-field=ts",
@@ -707,7 +707,7 @@ class DnSpec extends SparkSpec {
     // breakdowns/filters tolerate missing fields (row-drop semantics),
     // but a mistyped time field would silently build the whole index
     // into the null partition — that must be an error
-    val idx = Files.createTempDirectory("graft-dn-tftypo").toString
+    val idx = tempDir("graft-dn-tftypo").toString
     val e = intercept[GraftException] {
       Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",
         "--breakdowns=event_type", "--time-field=tz"))
@@ -740,9 +740,9 @@ class DnSpec extends SparkSpec {
   }
 
   test("curate lifecycle: add -> list -> run == library pipeline -> remove") {
-    val cfg = Files.createTempDirectory("graft-dn-curate")
+    val cfg = tempDir("graft-dn-curate")
       .resolve("graftrc")
-    val out = Files.createTempDirectory("graft-dn-curate-out")
+    val out = tempDir("graft-dn-curate-out")
       .toString + "/manifest"
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
@@ -779,7 +779,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("curate-add: --budget without --weights is rejected eagerly (ADVICE r14)") {
-    val cfg = Files.createTempDirectory("graft-dn-curatebv")
+    val cfg = tempDir("graft-dn-curatebv")
       .resolve("graftrc")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
@@ -795,7 +795,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("curate --decontam=chunk: profile round-trip, CLI == library, bad value rejected") {
-    val cfg = Files.createTempDirectory("graft-dn-curatedc")
+    val cfg = tempDir("graft-dn-curatedc")
       .resolve("graftrc")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
@@ -816,7 +816,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("curate --lang-quotas: profile round-trip, CLI == library, bad value rejected (row 116)") {
-    val cfg = Files.createTempDirectory("graft-dn-curatelq")
+    val cfg = tempDir("graft-dn-curatelq")
       .resolve("graftrc")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
@@ -843,7 +843,7 @@ class DnSpec extends SparkSpec {
   }
 
   test("curate --shuffle-seed: profile round-trip, CLI == library, seed moves the layout (row 117)") {
-    val cfg = Files.createTempDirectory("graft-dn-curatess")
+    val cfg = tempDir("graft-dn-curatess")
       .resolve("graftrc")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
@@ -874,9 +874,9 @@ class DnSpec extends SparkSpec {
 
   test("curate --ledger-out: the disposition ledger lands next to the manifest and accounts for the profile's quota tail (row 120)") {
     import org.apache.spark.sql.functions.{col, sum}
-    val cfg = Files.createTempDirectory("graft-dn-curatelg")
+    val cfg = tempDir("graft-dn-curatelg")
       .resolve("graftrc")
-    val out = Files.createTempDirectory("graft-dn-curatelg-out")
+    val out = tempDir("graft-dn-curatelg-out")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"
     // every source capped at 25 tokens — far below any doc population
@@ -912,7 +912,7 @@ class DnSpec extends SparkSpec {
 
   test("curate with weights: quotas are SOLVED by the water-filling " +
       "allocator, equal to the library composition") {
-    val cfg = Files.createTempDirectory("graft-dn-curatew")
+    val cfg = tempDir("graft-dn-curatew")
       .resolve("graftrc")
     val docs = s"$sf001/documents.parquet"
     val embs = s"$sf001/embeddings.parquet"

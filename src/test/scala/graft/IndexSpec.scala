@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.filter.Cmp
 import graft.index.Index
 import graft.index.Index.Metric
@@ -11,7 +9,7 @@ import graft.sources.Sources
   * raw data (reference: README.md:345-420 — "the results are the same"). */
 class IndexSpec extends SparkSpec {
 
-  private def tmp() = Files.createTempDirectory("graft-index").toString
+  private def tmp() = tempDir("graft-index").toString
 
   private lazy val ev = Sources.events(spark, sf001).cache()
   private val metric = Metric("by_type_user",

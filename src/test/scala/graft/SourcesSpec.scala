@@ -1,10 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardOpenOption}
 import java.time.Instant
 
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.filter.Cmp
 import graft.sources.Sources
@@ -13,20 +15,21 @@ import graft.sources.Sources
   * model (lib/datasource-file.js, lib/path-enum.js, lib/fs-find.js). */
 class SourcesSpec extends SparkSpec {
 
+  private def put(root: Path, day: String, lines: Seq[String]): Unit = {
+    val dir = root.resolve(day)
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("data.ndjson"), lines.mkString("\n") + "\n")
+  }
+
   /** day dir → records; nested objects exercise dotted paths. */
   private def writeTree(): Path = {
-    val root = Files.createTempDirectory("graft-ndjson")
-    def put(day: String, lines: Seq[String]): Unit = {
-      val dir = root.resolve(day)
-      Files.createDirectories(dir)
-      Files.writeString(dir.resolve("data.ndjson"), lines.mkString("\n") + "\n")
-    }
-    put("2014/05-01", Seq(
+    val root = tempDir("graft-ndjson")
+    put(root, "2014/05-01", Seq(
       """{"time":"2014-05-01T10:00:00Z","req":{"method":"GET"},"latency":3}""",
       """{"time":"2014-05-01T11:00:00Z","req":{"method":"PUT"},"latency":9}"""))
-    put("2014/05-02", Seq(
+    put(root, "2014/05-02", Seq(
       """{"time":"2014-05-02T00:30:00Z","req":{"method":"GET"},"latency":17}"""))
-    put("2014/06-01", Seq(
+    put(root, "2014/06-01", Seq(
       """{"time":"2014-06-01T08:00:00Z","req":{"method":"GET"},"latency":40}"""))
     // junk that must be ignored by the layout walk
     Files.createDirectories(root.resolve("not-a-year/05-01"))
@@ -80,7 +83,7 @@ class SourcesSpec extends SparkSpec {
   test("a flat directory of many ndjson files scans as one dataset") {
     // reference tst.scan_fileset.sh: --path pointing at a directory
     // reads every file in it
-    val dir = Files.createTempDirectory("graft-fileset")
+    val dir = tempDir("graft-fileset")
     Files.writeString(dir.resolve("a.ndjson"),
       """{"req":{"method":"GET"},"latency":3}""" + "\n")
     Files.writeString(dir.resolve("b.ndjson"),
@@ -93,7 +96,7 @@ class SourcesSpec extends SparkSpec {
 
   test("schema cache serves the current bytes and invalidates on rewrite") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-schemacache").toString
+    val dir = tempDir("graft-schemacache").toString
     val p = s"$dir/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.mode("overwrite").parquet(p)
@@ -118,7 +121,7 @@ class SourcesSpec extends SparkSpec {
     // the reference's manta datasource gunzips objects in flight
     // (datasource-manta.js); here the Hadoop codec layer does it — same
     // records whether the file is plain or .gz
-    val dir = Files.createTempDirectory("graft-gz")
+    val dir = tempDir("graft-gz")
     val lines = Seq(
       """{"time":"2014-05-01T10:00:00Z","req":{"method":"GET"},"latency":3}""",
       """{"time":"2014-05-01T11:00:00Z","req":{"method":"PUT"},"latency":9}""")
@@ -132,5 +135,108 @@ class SourcesSpec extends SparkSpec {
     assert(Scan.scan(df, cfg).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("GET" -> 1L, "PUT" -> 1L))
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events arrive in order, so once a marker job run after `body` is
+    * seen, every job `body` started has been counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val Marker = "graft-sources-spec-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Marker))
+          marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(marked.await(1, java.util.concurrent.TimeUnit.MINUTES))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("a second dateLayout over an unchanged tree runs no Spark job before its action") {
+    val r = writeTree().toString
+    val (first, inferJobs) = jobsDuring(Sources.dateLayout(spark, r))
+    assert(inferJobs > 0, "the first read of a selection infers its schema")
+    val (second, jobs) = jobsDuring(Sources.dateLayout(spark, r))
+    assert(jobs == 0)
+    assert(second.schema == first.schema)
+    assert(rows(second) == rows(first) && rows(second).size == 4)
+    // the fully-pruned branch reads through the same memo
+    val late = Some(Instant.parse("2020-01-01T00:00:00Z"))
+    val empty = Sources.dateLayout(spark, r, late, None)
+    val (again, prunedJobs) = jobsDuring(Sources.dateLayout(spark, r, late, None))
+    assert(prunedJobs == 0 && again.schema == empty.schema && again.count() == 0)
+  }
+
+  test("a line appended in place with a new field re-infers, and the field resolves") {
+    val r = writeTree()
+    assert(!Sources.dateLayout(spark, r.toString).columns.contains("zone"))
+    Files.writeString(r.resolve("2014/05-02/data.ndjson"),
+      """{"time":"2014-05-02T01:00:00Z","req":{"method":"GET"},"latency":5,"zone":"z1"}""" + "\n",
+      StandardOpenOption.APPEND)
+    val df = Sources.dateLayout(spark, r.toString)
+    assert(df.where(col("zone") === "z1").count() == 1)
+    assert(df.count() == 5)
+  }
+
+  test("a new file in an existing day directory re-infers") {
+    val r = writeTree()
+    // the day-dir selection and the recursive read of the whole root
+    val reads = Seq[String => DataFrame](Sources.dateLayout(spark, _), Sources.ndjson(spark, _))
+    reads.foreach(read => assert(!read(r.toString).columns.contains("host")))
+    Files.writeString(r.resolve("2014/05-01/more.ndjson"),
+      """{"time":"2014-05-01T12:00:00Z","req":{"method":"PUT"},"latency":1,"host":"h9"}""" + "\n")
+    reads.foreach { read =>
+      val df = read(r.toString)
+      assert(df.where(col("host") === "h9").count() == 1)
+      assert(df.count() == 5)
+    }
+  }
+
+  test("a pruned selection keeps its own inferred types, not the root's") {
+    val r = tempDir("graft-ndjson-types")
+    put(r, "2014/05-01", Seq("""{"time":"2014-05-01T10:00:00Z","latency":3}"""))
+    put(r, "2014/06-01", Seq("""{"time":"2014-06-01T10:00:00Z","latency":2.5}"""))
+    val june = Some(Instant.parse("2014-06-01T00:00:00Z"))
+    def may() = Sources.dateLayout(spark, r.toString, None, june)
+    assert(Sources.dateLayout(spark, r.toString).schema("latency").dataType == DoubleType)
+    assert(may().schema("latency").dataType == LongType)
+    assert(may().schema("latency").dataType == LongType, "a memo hit keeps the type")
+    assert(rows(may()) == Seq("[3,2014-05-01T10:00:00Z]"))
+  }
+
+  test("every JSON read in src/main goes through the one memoized reader in Sources") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getCanonicalPath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val pat = java.util.regex.Pattern.compile("""\.json\s*\(""")
+    val sites: Seq[(String, String)] = walk(root).flatMap { f =>
+      val rel = f.getPath.stripPrefix("src/main/scala/graft/")
+      scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .map(_.trim)
+        // call sites only: prose in comments and JSON writers don't count
+        .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.contains(".write"))
+        .filter(l => pat.matcher(l).find())
+        .map(l => rel -> l)
+        .toList
+    }
+    // the one site is the loader that Sources.readNdjson hands to memoRead
+    assert(sites.map(_._1) == Seq("sources/Sources.scala") &&
+      sites.forall(_._2.startsWith("_.json(")),
+      s"JSON read sites outside the memoized reader: ${sites.mkString("; ")}\n" +
+        "Read ndjson through Sources.ndjson / dateLayout / timeFormatLayout, " +
+        "so its schema is inferred once per selection.")
   }
 }

@@ -1,13 +1,33 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one JVM-wide
   * session, tests stay fast). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[Path]()
+
+  /** A fresh temp dir, deleted with its contents after the suite. */
+  def tempDir(prefix: String): Path = tempDirs.synchronized {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir
+  }
+
+  /** Best effort: a dir that cannot be removed never fails the suite. */
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach { d =>
+      try graft.tools.LocalFs.deleteRec(d)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+    })
+    finally super.afterAll()
 }
 
 object SparkSpec {
