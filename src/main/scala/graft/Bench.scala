@@ -3,17 +3,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core: the harness budgets local[32]; an unset env
-    // var must not quietly run the bench at a fraction of the machine.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // 55 distinct query plans share scan/tokenize subtrees; the default
-      // 100-entry codegen class cache thrashes across them (measured ~8%
-      // of total bench time in recompiles)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
+    val cpus = Session.cpus
+    val spark = Session.builder(s"local[$cpus]", cpus)
       // AQE coalescing floor (r19, guide §2.5): several dedup/ANN
       // stages are compute-dense but bytes-small (md5 per shingle row,
       // in-bucket pair expansion), and the default 1 MB floor coalesces
@@ -23,22 +14,9 @@ object Bench {
       // production scale post-shuffle partitions are orders of
       // magnitude above EITHER floor, so the setting is inert there —
       // it removes a small-input measurement artifact, it does not
-      // tune for local[32]. Parameterised (r20) so the floor can be
-      // A/B'd on any box (SPARK_GRAFT_MINPART=1m restores the Spark
-      // default); the driver never sets it, so the scored bench always
-      // measures the committed 64k value. r20 same-box A/B at 32
-      // threads: full suite 194.2 s (64k) vs 202.6 s (1m) — see
-      // OPTIMIZATION_r20.md.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "64k"))
-      // dn_date partitioning and date parsing are TZ-sensitive; pin UTC
-      // here too (build.sbt sets it for sbt-forked runs, but Bench must
-      // not depend on the launcher)
-      .config("spark.sql.session.timeZone", "UTC")
-      // external bucketed tables keep data under /tmp; the catalog
-      // default location must not litter the repo cwd
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
+      // tune for local[32]. r20 same-box A/B at 32 threads: full suite
+      // 194.2 s (64k) vs 202.6 s (1m) — see OPTIMIZATION_r20.md.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Cluster-profile measurement aid: SPARK_GRAFT_LINEAGE=reliable

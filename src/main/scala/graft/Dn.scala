@@ -646,7 +646,27 @@ object Dn {
   private def resolverFor(df: DataFrame): String => Column =
     f => if (hasField(df, f)) col(f) else lit(null)
 
-  def readData(spark: SparkSession, a: DnArgs): DataFrame = {
+  /** The leaf directories of --data's time layout, from one walk of the
+    * tree: those of an explicit --time-format (empty when the tree is
+    * absent, which [[readData]] reports), else those of a `%Y/%m-%d`
+    * tree when --data holds one. None for parquet and json-skinner data
+    * and for plain ndjson. */
+  private def dataLayout(spark: SparkSession, a: DnArgs)
+      : Option[Seq[(java.time.Instant, java.time.Instant, String)]] =
+    a.flags.get("data").filter(p => !p.endsWith(".parquet") &&
+        !a.flags.get("data-format").contains("json-skinner"))
+      .flatMap { p =>
+        a.flags.get("time-format").filter(_.nonEmpty) match {
+          case Some(f) => Some(Sources.walkLayout(spark, p, f))
+          case None =>
+            Some(Sources.walkLayout(spark, p, "%Y/%m-%d")).filter(_.nonEmpty)
+        }
+      }
+
+  /** Read --data, with `layout` from [[dataLayout]]. */
+  def readData(spark: SparkSession, a: DnArgs,
+      layout: => Option[Seq[(java.time.Instant, java.time.Instant, String)]])
+      : DataFrame = {
     val path = a.flags.getOrElse("data",
       throw new GraftException("--data is required"))
     // reference parity (tst.badargs.sh): an unknown data-format is an
@@ -659,28 +679,18 @@ object Dn {
       Sources.skinnerPoints(spark, path)
     else if (path.endsWith(".parquet") ||
         a.flags.get("data-format").contains("parquet"))
-      spark.read.parquet(path)
-    else if (a.flags.get("time-format").exists(_.nonEmpty)) {
+      Sources.parquet(spark, path)
+    else layout match {
       // an explicit time-format (reference: datasource --time-format,
       // any strftime pattern of %Y %m %d %H) asserts the layout — fail
       // loudly if the tree is absent rather than silently scanning
       // nothing
-      val f = a.flags("time-format")
-      if (Sources.timeFormatDirs(spark, path, f, None, None).isEmpty)
-        throw new GraftException(s"no $f tree under $path")
-      Sources.timeFormatLayout(spark, path, f, cfg.after, cfg.before)
+      case Some(leaves) if leaves.isEmpty => throw new GraftException(
+        s"no ${a.flags("time-format")} tree under $path")
+      case Some(leaves) => Sources.readLayout(spark, leaves, cfg.after, cfg.before)
+      case None => Sources.ndjson(spark, path)
     }
-    else if (Sources.dateLayoutDirs(spark, path, None, None).nonEmpty)
-      Sources.dateLayout(spark, path, cfg.after, cfg.before)
-    else Sources.ndjson(spark, path)
   }
-
-  /** Whether --data names a %Y/%m-%d tree (bounds already pruned by path). */
-  private def isDateTree(spark: SparkSession, a: DnArgs): Boolean =
-    a.flags.get("data").exists(p =>
-      !p.endsWith(".parquet") &&
-        !a.flags.get("data-format").contains("json-skinner") &&
-        Sources.dateLayoutDirs(spark, p, None, None).nonEmpty)
 
   /** Set by [[run]] when `--warnings`: the per-record diagnostics frame
     * for the scan it just planned (same data, resolver, and RESOLVED
@@ -713,6 +723,7 @@ object Dn {
       else None
     val a = resolveDatasource(a0, dnCfg, dsFilterOverride)
     val cfg0 = cfgOf(a)
+    lazy val layout = dataLayout(spark, a)
     // A date-laid-out tree without --time-field is still boundable: the
     // path enumeration prunes to day granularity (exactly the reference's
     // behavior when only the path carries time). Record-level bounds
@@ -720,8 +731,8 @@ object Dn {
     // query/index-read serve from the index, where nothing would replace
     // the stripped bounds.
     val readsData = Set("scan", "build", "index-scan").contains(a.mode)
-    val pathCarriesTime = a.flags.get("time-format").exists(_.nonEmpty) ||
-      isDateTree(spark, a)
+    def pathCarriesTime = a.flags.get("time-format").exists(_.nonEmpty) ||
+      layout.nonEmpty
     val cfg =
       if (readsData && cfg0.timeField.isEmpty && pathCarriesTime)
         cfg0.copy(after = None, before = None)
@@ -746,7 +757,7 @@ object Dn {
     a.mode match {
       case "scan" =>
         val base = cfg.copy(valueField = skinnerValue)
-        val df = readData(spark, a)
+        val df = readData(spark, a, layout)
         val rs = resolverFor(df)
         if (a.warnings) lastWarnings = Some(Scan.warnings(df, base, rs))
         if (a.counters)
@@ -766,7 +777,7 @@ object Dn {
         // the datasource's standing filter (and any --before/--after)
         // constrains what gets indexed, like the reference's scan-side
         // filtering during build; metric filters apply per metric inside
-        val raw = readData(spark, a)
+        val raw = readData(spark, a, layout)
         // missing-field tolerance is for breakdowns/filters (record
         // without the field → row dropped); the TIME field is the
         // index's partitioning axis — a typo here would silently build
@@ -863,7 +874,7 @@ object Dn {
         val tf = a.flags.getOrElse("time-field",
           throw new GraftException("index-scan needs --time-field"))
         val base = cfg.copy(valueField = skinnerValue)
-        val df = readData(spark, a)
+        val df = readData(spark, a, layout)
         if (df.schema.nonEmpty && !hasField(df, tf))
           throw new GraftException(s"--time-field $tf not found in data")
         val rs = resolverFor(df)
@@ -887,12 +898,8 @@ object Dn {
       if (out.nonEmpty) println(out)
       return
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(sys.env.getOrElse("SPARK_MASTER", "local[8]"),
+      sys.env.get("SPARK_GRAFT_CPUS").fold(8)(_.trim.toInt))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = run(spark, argv.toSeq)

@@ -49,7 +49,7 @@ object RetrievalQueries {
   // degraded memory of the item), and the gate measures whether
   // retrieval finds the known item in the top-KiK. Floors are
   // per-mille of the SAMPLE (same statistical force at any corpus
-  // size) and were MEASURED by tools/MeasureRetrieval — a
+  // size) and were MEASURED at three scales (SURVEY.md §2 row 101) — a
   // deterministic-but-ranking-destroying bug (constant scores, idf
   // dropped, fusion that returns one leg) lands far below them
   // (RetrievalSpec drives those arms explicitly).
@@ -100,7 +100,7 @@ object RetrievalQueries {
           "'ki:' || CAST(qid AS VARCHAR)")}, qid
         LIMIT $cap"""
 
-  /** Measured floors (tools/MeasureRetrieval, per-mille of the
+  /** Measured floors (SURVEY.md §2 row 101, per-mille of the
     * [[kiTargets]] SAMPLE — ≤ TargetCap queries at any corpus size, so
     * the statistic has the same force at 100× that it has here):
     *   n_queries          : 20 sf0.001, 20 sf0.01, 64 (capped) 10×

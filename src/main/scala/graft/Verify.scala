@@ -50,17 +50,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // external bucketed tables keep data under /tmp; the catalog
-      // default location must not litter the repo cwd
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder(s"local[${Session.cpus}]", Session.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Local iteration aid mirroring Bench: SPARK_GRAFT_ONLY=a,b dumps a

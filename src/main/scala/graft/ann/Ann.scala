@@ -156,9 +156,10 @@ object Ann {
     * is rows × bucket population AND each bucket key is one join task,
     * so bucket population is both the cost multiplier and the
     * parallelism ceiling. Measured at the 10× gate (20k vectors,
-    * MeasureKnn): stepping 16 → 32 buckets cut first-run knnJoin from
-    * 19.1 s to 2.0 s (candidate rows 25.1M → 12.6M, the hottest task
-    * halved) with ZERO left rows short of k after adaptive probing —
+    * SURVEY.md §11 item 6): stepping 16 → 32 buckets cut first-run
+    * knnJoin from 19.1 s to 2.0 s (candidate rows 25.1M → 12.6M, the
+    * hottest task halved) with ZERO left rows short of k after adaptive
+    * probing —
     * even at 128 buckets probing kept every row filled, so the tighter
     * target costs no recall the probe can't recover. */
   val QuadraticTargetBucket = 1024L

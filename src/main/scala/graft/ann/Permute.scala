@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
  * balance only. A permutation REGROUPS the original coordinates
  * instead of mixing them, so per-subspace elections genuinely change —
  * and recall measurably MORE THAN DOUBLES on the anisotropic fixture
- * (MeasurePermutation: 40→86 of 200 at sf0.01, 41→86 at sf0.001,
+ * (SURVEY.md §2 row 93: 40→86 of 200 at sf0.01, 41→86 at sf0.001,
  * 42→82 at the 10× dir's deduplicated population). This is the
  * recall-floor-able transform the r12 verdict asked the rotation to be.
  *

@@ -185,11 +185,10 @@ object Dedup {
       textCol: String = "text", n: Int = 3,
       bands: Int = Bands, rowsPerBand: Int = RowsPerBand,
       maxBucket: Option[Int] = None,
-      heavyBucket: Int = HeavyBucket,
-      reliable: Boolean = false): DataFrame =
+      heavyBucket: Int = HeavyBucket): DataFrame =
     candidatesOfSignature(
       minhashSignature(docs, idCol, textCol, n, bands * rowsPerBand),
-      bands, rowsPerBand, maxBucket, heavyBucket, reliable)
+      bands, rowsPerBand, maxBucket, heavyBucket)
 
   /**
    * Per-bucket population histogram of the MinHash banding — run this
@@ -238,23 +237,13 @@ object Dedup {
    * trade (size it with [[bucketStats]]); default None keeps exact LSH
    * semantics, now safe even for degenerate buckets.
    */
-  /** Lineage cut shared by the dedup pipeline stages: `reliable = true`
-    * uses fault-tolerant `checkpoint()` (recomputable after executor
-    * loss — requires `sparkContext.setCheckpointDir`); the default
-    * honors the session's [[graft.plans.Lineage]] policy
-    * (`spark.graft.lineage`), so a cluster profile can upgrade every
-    * cut to reliable without threading the parameter. */
-  private def cut(df: DataFrame, reliable: Boolean): DataFrame =
-    graft.plans.Lineage.cut(df, force = reliable)
-
   private[graft] def bucketPairs(keyed: DataFrame, keyCols: Seq[String],
-      heavy: Int, maxBucket: Option[Int],
-      reliable: Boolean = false): DataFrame = {
+      heavy: Int, maxBucket: Option[Int]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*)
     val counted = keyed.withColumn("cnt", count(lit(1)).over(w))
-    val bounded = cut(maxBucket
+    val bounded = maxBucket
       .map(cap => counted.where(col("cnt") <= cap)).getOrElse(counted)
-      .where(col("cnt") > 1), reliable)
+      .where(col("cnt") > 1).lineageCut
     val small = bounded.where(col("cnt") <= heavy)
       .groupBy(keyCols.map(col): _*)
       .agg(sort_array(collect_set(col("item"))).as("xs"))
@@ -274,10 +263,10 @@ object Dedup {
     * (see [[bucketPairs]] for the small/heavy bucket regimes). */
   private[graft] def candidatesOfSignature(sig: DataFrame, bands: Int,
       rowsPerBand: Int, maxBucket: Option[Int] = None,
-      heavy: Int = HeavyBucket, reliable: Boolean = false): DataFrame =
+      heavy: Int = HeavyBucket): DataFrame =
     bucketPairs(
       bandedKeys(sig, bands, rowsPerBand).withColumnRenamed("id", "item"),
-      Seq("band", "bh"), heavy, maxBucket, reliable)
+      Seq("band", "bh"), heavy, maxBucket)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
       .distinct()
 
@@ -587,8 +576,7 @@ object Dedup {
    */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3,
-      heavyBucket: Int = HeavyBucket,
-      reliable: Boolean = false): DataFrame = {
+      heavyBucket: Int = HeavyBucket): DataFrame = {
     val withSim = simhashTable(docs, idCol, textCol)
     val bandCols = (0 until SimBands).map { b =>
       struct(lit(b).as("band"),
@@ -601,7 +589,7 @@ object Dedup {
       .select(struct(col("id"), col("sim")).as("item"),
         explode(array(bandCols: _*)).as("b"))
       .select(col("item"), col("b.band").as("band"), col("b.bv").as("bv"))
-    bucketPairs(banded, Seq("band", "bv"), heavyBucket, None, reliable)
+    bucketPairs(banded, Seq("band", "bv"), heavyBucket, None)
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
         bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
@@ -625,26 +613,24 @@ object Dedup {
    * "any label changed?" is a scan of the just-materialized round
    * output, not a separate join job.
    *
-   * Lineage is cut per round; `reliable = true` uses fault-tolerant
-   * `checkpoint()` (requires `spark.sparkContext.setCheckpointDir`) so a
-   * lost executor mid-propagation can recompute — the right mode on a
-   * real cluster; the default `localCheckpoint()` is faster for
+   * Lineage is cut per round under the session's [[graft.plans.Lineage]]
+   * policy: `spark.graft.lineage=reliable` checkpoints to a fault-tolerant
+   * FS so a lost executor mid-propagation can recompute — the right mode
+   * on a real cluster; the default `localCheckpoint()` is faster for
    * single-node/interactive use. Returns (doc_id, cluster_id = min doc
    * id in the component) for every doc in at least one pair.
    */
   def clusters(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, minJaccard: Double = 0.6,
-      maxIters: Int = 20, reliable: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame = Dedup.cut(df, reliable)
-    val edges = cut(
-      jaccardVerified(docs, idCol, textCol, n, minJaccard, reliable)
-        .select(col("doc_a"), col("doc_b")))
+      maxIters: Int = 20): DataFrame = {
+    val edges = jaccardVerified(docs, idCol, textCol, n, minJaccard)
+      .select(col("doc_a"), col("doc_b")).lineageCut
     val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(col("src"))
       .persist()
-    var labels = cut(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
+    var labels = sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")).lineageCut
     var converged = false
     var i = 0
     val debug = sys.env.contains("GRAFT_CLUSTERS_DEBUG")
@@ -659,8 +645,9 @@ object Dedup {
       val msgs = sym.join(labels, col("src") === col("id"))
         .select(col("dst").as("id"), col("label"),
           lit(null).cast(labels.schema("label").dataType).as("prev"))
-      val next = cut(self.union(msgs).groupBy(col("id"))
-        .agg(min(col("label")).as("label"), min(col("prev")).as("prev")))
+      val next = self.union(msgs).groupBy(col("id"))
+        .agg(min(col("label")).as("label"), min(col("prev")).as("prev"))
+        .lineageCut
       // next is already materialized by the checkpoint; min-propagation
       // is monotone decreasing, so "changed" == label < prev, and the
       // check is a cached-block scan, not a join.
@@ -1034,8 +1021,7 @@ object Dedup {
    */
   def jaccardVerified(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3,
-      minJaccard: Double = MinJaccard,
-      reliable: Boolean = false): DataFrame = {
+      minJaccard: Double = MinJaccard): DataFrame = {
     // ONE tokenize+shingle pass AND one aggregation, materialized: the
     // per-doc shingle SET (for the verify joins) and the 16 signature
     // minima (for the banding) fold in the SAME groupBy — min over the
@@ -1050,12 +1036,11 @@ object Dedup {
         XHash.h60(col("s")).as("h1"), XHash.h56(col("s")).as("h2"))
     val members = rows.select(col("id") +: col("s") +: (0 until k).map(i =>
       XHash.member(col("h1"), col("h2"), i).as(s"h$i")): _*)
-    val sh = cut(members.groupBy(col("id"))
+    val sh = members.groupBy(col("id"))
       .agg(collect_set(col("s")).as("sh"),
-        (0 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*), reliable)
+        (0 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*).lineageCut
     candidatesOfSignature(
-      sh.select(col("id") +: (0 until k).map(i => col(s"m$i")): _*),
-      8, 2, reliable = reliable)
+      sh.select(col("id") +: (0 until k).map(i => col(s"m$i")): _*), 8, 2)
       .join(sh.as("sa"), col("doc_a") === col("sa.id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.id"))
       .select(col("doc_a"), col("doc_b"),

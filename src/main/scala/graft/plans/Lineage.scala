@@ -50,13 +50,10 @@ object Lineage {
     }
   }
 
-  /** Eagerly materialize `df` and cut its lineage, honoring the
-    * session's lineage policy. Callers with an explicit `reliable`
-    * parameter (the dedup family) pass it through `force`; the session
-    * conf can still upgrade local→reliable but never downgrades an
-    * explicit reliable request. */
-  def cut(df: DataFrame, force: Boolean = false): DataFrame =
-    if (force || isReliable(df)) df.checkpoint() else df.localCheckpoint()
+  /** Eagerly materialize `df` and cut its lineage under the session's
+    * lineage policy — the one switch; no caller overrides it. */
+  def cut(df: DataFrame): DataFrame =
+    if (isReliable(df)) df.checkpoint() else df.localCheckpoint()
 
   /** Postfix form: `df.lineageCut` == `Lineage.cut(df)`. */
   implicit class LineageOps(private val df: DataFrame) extends AnyVal {

@@ -172,7 +172,7 @@ object Sources {
 
   /** Every leaf directory of `pattern` under `root` as (interval start,
     * interval end, path), sorted by time. */
-  private def walkLayout(spark: SparkSession, root: String, pattern: String)
+  private[graft] def walkLayout(spark: SparkSession, root: String, pattern: String)
       : Seq[(java.time.Instant, java.time.Instant, String)] = {
     val segSpecs: Seq[(scala.util.matching.Regex, Seq[Char])] =
       pattern.split("/").toSeq.map { seg =>
@@ -245,14 +245,19 @@ object Sources {
    */
   def timeFormatLayout(spark: SparkSession, root: String, pattern: String,
       after: Option[java.time.Instant] = None,
-      before: Option[java.time.Instant] = None): DataFrame = {
-    val all = walkLayout(spark, root, pattern)
+      before: Option[java.time.Instant] = None): DataFrame =
+    readLayout(spark, walkLayout(spark, root, pattern), after, before)
+
+  /** [[timeFormatLayout]] over the leaves of an already walked layout. */
+  private[graft] def readLayout(spark: SparkSession,
+      all: Seq[(java.time.Instant, java.time.Instant, String)],
+      after: Option[java.time.Instant],
+      before: Option[java.time.Instant]): DataFrame =
     all.filter(overlaps(after, before)).map(_._3) match {
       case dirs if dirs.nonEmpty => readNdjson(spark, dirs)
       case _ if all.nonEmpty => readNdjson(spark, Seq(all.head._3)).limit(0)
       case _ => spark.emptyDataFrame
     }
-  }
 
   /**
    * Enumerate the day directories of a dragnet-style `%Y/%m-%d` layout

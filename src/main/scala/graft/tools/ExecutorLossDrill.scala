@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Executor-loss drill for the lineage knob (r17 verdict item 4).
  * [[graft.plans.Lineage]] claims: `local` mode (localCheckpoint) is
@@ -61,12 +59,8 @@ object ExecutorLossDrill {
     val mode = args(0) // local | reliable
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val ck = java.nio.file.Files.createTempDirectory("graft-drill-ck")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
+    val spark = graft.Session.builder("local-cluster[2,1,1024]", 8)
       .appName(s"graft-executor-loss-$mode")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.graft.lineage", mode)
       .config("spark.graft.checkpointDir", ck.toString)
       // the executor JVMs need the graft classes the driver was

@@ -208,12 +208,7 @@ object FuzzCorpus {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outd = if (args.length > 1) args(1) else "/tmp/graft-fuzz"
     val seed = if (args.length > 2) args(2).toLong else 1L
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, base, outd, seed)
     spark.stop()

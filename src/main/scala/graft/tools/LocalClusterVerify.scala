@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * The cross-JVM correctness gate (r18 verdict item 2): run the driver's
  * Verify dump under `local-cluster[2,4,2048]` — real standalone
@@ -25,14 +23,8 @@ object LocalClusterVerify {
     val outDir = args(1)
     val only = if (args.length > 2 && args(2).nonEmpty)
       Some(args(2).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
+    val spark = graft.Session.builder("local-cluster[2,4,2048]", 8)
       .appName("graft-local-cluster-verify")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-lc")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")
       // the executor JVMs need the graft classes the driver holds
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .getOrCreate()

@@ -52,7 +52,7 @@ object LocalFs {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  private def dirKey(dir: String): String =
+  private[graft] def dirKey(dir: String): String =
     "d" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Where [[cached]] keeps the artifact of `kind` built from `inputs`
@@ -98,13 +98,18 @@ object LocalFs {
   /** Drop the entries beside `live` that come from the same source dir
     * (`<dirKey>-…`) under a different fingerprint. A dir key has no `-`
     * and a fingerprint has neither `-` nor `.`, so `<dirKey>-<fp>`
-    * followed by the end, `-` or `.` names exactly one generation. */
+    * followed by the end, `-` or `.` names exactly one generation.
+    * Entries under the dir's key from before the `d` prefix
+    * (`_abs_dir-…`) are all stale. Every current key starts with `d`, so
+    * an old key that does not can name no current generation. */
   private def dropStaleSiblings(live: Path, key: String): Unit = {
     val stem = live.getFileName.toString.split('-').take(2).mkString("-")
+    val oldKey = key.drop(1)
     Option(live.getParent.toFile.listFiles()).toSeq.flatten
       .map(_.getName)
-      .filter(n => n.startsWith(s"$key-") && n != stem &&
-        !n.startsWith(s"$stem-") && !n.startsWith(s"$stem."))
+      .filter(n => (n.startsWith(s"$key-") && n != stem &&
+        !n.startsWith(s"$stem-") && !n.startsWith(s"$stem.")) ||
+        (!oldKey.startsWith("d") && n.startsWith(s"$oldKey-")))
       .foreach(n => deleteRec(live.resolveSibling(n)))
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -39,14 +39,8 @@ object MakeScale {
     val base = args(0)
     val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.Session.cpus
+    val spark = graft.Session.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // events.ts is TIMESTAMP(NANOS) — read as raw nanos; the events remap
     // below rebuilds it as a proper micros TIMESTAMP on write
@@ -58,7 +52,7 @@ object MakeScale {
         spark.range(copies.toLong).select(col("id").as("dn_copy")))
       val off = col("dn_copy") * lit(KeyStride)
       remap(exploded, off).drop("dn_copy")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/$table.parquet")
       println(s"[make-scale] $table x$copies done")
     }

@@ -113,12 +113,7 @@ object MakeSkew {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outd = if (args.length > 1) args(1) else "/tmp/graft-skew"
     val extra = if (args.length > 2) args(2).toInt else 560
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, base, outd, extra)
     spark.stop()

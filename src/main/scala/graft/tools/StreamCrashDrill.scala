@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -49,12 +48,8 @@ object StreamCrashDrill {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, in, ckpt, out) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.Session.builder("local[4]", 4)
       .appName(s"graft-stream-crash-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -46,7 +46,7 @@ class AnnSpec extends SparkSpec {
     val oneShot = Ann.ivfTopK(emb, q, 10).collect().map(_.toSeq).toSeq
     // persist the cell assignment (what a production pipeline stores
     // bucketed by cell), then search it
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf").toString
     val centroids = Ann.ivfCentroids(emb)
     Ann.ivfAssign(emb, centroids).write.mode("overwrite")
       .partitionBy("cell").parquet(dir)
@@ -131,7 +131,7 @@ class AnnSpec extends SparkSpec {
     val centroids = Ann.ivfCentroids(emb)
     val cb = Ann.pqCodebooks(emb)
     val inline = Ann.ivfpqTopK(emb, q, 10).collect().map(_.toSeq).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq").toString
     // the production layout: codes partitioned by cell, corpus retired
     Ann.ivfpqEncode(emb, centroids, cb).write.mode("overwrite")
       .partitionBy("cell").parquet(dir)
@@ -448,7 +448,7 @@ class AnnSpec extends SparkSpec {
     val mod = Some(math.max(1L, n / nl))
     val centroids = Ann.ivfCentroids(emb, nlist = nl, modulus = mod)
     val cb = Ann.pqCodebooks(emb, modulus = Some(math.max(1L, n / 16)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-b").toString
+    val dir = tempDir("graft-ivfpq-b").toString
     Ann.ivfpqEncode(emb, centroids, cb).write.mode("overwrite")
       .partitionBy("cell").parquet(dir)
     val codes = spark.read.parquet(dir)
@@ -521,7 +521,7 @@ class AnnSpec extends SparkSpec {
     ).toDF("cid", "cv")
     val cb = Ann.pqCodebooks(corpus, modulus = Some(64))
     val enc = Ann.ivfpqEncode(corpus, centroids, cb).localCheckpoint()
-    val base = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val base = tempDir("graft-skew").toString
     enc.write.mode("overwrite").partitionBy("cell").parquet(s"$base/bare")
     // fat cell holds 900×m=3600 code rows; targetRows=512 → splits=8
     Ann.boundedCellLayout(enc, targetRows = 512)
@@ -564,7 +564,7 @@ class AnnSpec extends SparkSpec {
     val centroids = Ann.ivfCentroids(old, nlist = 4, modulus = Some(20L))
       .localCheckpoint()
     val cb = Ann.pqCodebooks(old, modulus = Some(5L)).localCheckpoint()
-    val base = java.nio.file.Files.createTempDirectory("graft-inc").toString
+    val base = tempDir("graft-inc").toString
     // the incremental lifecycle: old codes written, then the new batch
     // encoded against the persisted halves and APPENDED per cell
     centroids.write.parquet(s"$base/centroids")

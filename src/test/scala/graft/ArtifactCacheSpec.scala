@@ -76,6 +76,19 @@ class ArtifactCacheSpec extends SparkSpec {
       "siblings that share the fingerprint must survive each other's builds")
   }
 
+  test("a build drops the generations its source dir left under the key before the d prefix") {
+    val dir = sourceDir("oldkey")
+    val live = Paths.get(LocalFs.path("spec", dir, In))
+    val oldKey = live.getFileName.toString.takeWhile(_ != '-').drop(1)
+    assert(oldKey.startsWith("_"), oldKey)
+    val stale = Seq(s"$oldKey-1a2b", s"$oldKey-1a2b-day").map(live.resolveSibling)
+    val other = live.resolveSibling("_other_dir-1a2b")
+    (stale :+ other).foreach(p => writeMark(p.toString, "x"))
+    LocalFs.cached("spec", dir, In)(writeMark(_, "x"))
+    assert(stale.forall(p => !Files.exists(p)), "old-key generations must be swept")
+    assert(Files.exists(other), "another dir's old-key entry must survive")
+  }
+
   test("two threads asking for one key build it once") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global

@@ -45,13 +45,11 @@ class DedupSpec extends SparkSpec {
     assert(kept == Set(9L, 18L))
     // the store is self-contained: round-tripping it through parquet
     // changes nothing
-    val p = java.nio.file.Files.createTempDirectory("graft-store-spec")
-    try {
-      store.write.mode("overwrite").parquet(p.toString)
-      val kept2 = Dedup.incrementalKeepers(batch, spark.read.parquet(p.toString))
-        .collect().map(_.getLong(0)).toSet
-      assert(kept2 == kept)
-    } finally graft.tools.LocalFs.deleteRec(p)
+    val p = tempDir("graft-store-spec")
+    store.write.mode("overwrite").parquet(p.toString)
+    val kept2 = Dedup.incrementalKeepers(batch, spark.read.parquet(p.toString))
+      .collect().map(_.getLong(0)).toSet
+    assert(kept2 == kept)
   }
 
   test("store append + compact: chained crawls dedup, file count resets, results unchanged") {
@@ -66,28 +64,26 @@ class DedupSpec extends SparkSpec {
       (21L, rep("e f d")),                 // near-dup of old 2 → dropped
       (22L, rep("x y z"))                  // kept
     ).toDF("doc_id", "text")
-    val p = java.nio.file.Files.createTempDirectory("graft-store-compact")
-    try {
-      Dedup.signatureStore(old).write.mode("overwrite").parquet(p.toString)
-      def partFiles = new java.io.File(p.toString).listFiles()
-        .count(f => f.isFile && f.getName.startsWith("part-"))
-      val afterBase = partFiles
-      val keptA = Dedup.appendKeepersToStore(spark, crawlA, p.toString)
-        .collect().map(_.getLong(0)).toSet
-      assert(keptA == Set(10L))
-      // the append fragments the store: each crawl adds its own files
-      assert(partFiles > afterBase, s"append added no files ($partFiles)")
-      val fragKept = Dedup.incrementalKeepers(crawlB,
-        spark.read.parquet(p.toString)).collect().map(_.getLong(0)).toSet
-      assert(fragKept == Set(22L),
-        s"crawl B must see old AND crawl A through the store: $fragKept")
-      // compact: one data file, identical dedup results
-      val files = Dedup.compactStore(spark, p.toString)
-      assert(files == 1 && partFiles == 1, s"compacted to $files/$partFiles")
-      val compKept = Dedup.incrementalKeepers(crawlB,
-        spark.read.parquet(p.toString)).collect().map(_.getLong(0)).toSet
-      assert(compKept == fragKept)
-    } finally graft.tools.LocalFs.deleteRec(p)
+    val p = tempDir("graft-store-compact")
+    Dedup.signatureStore(old).write.mode("overwrite").parquet(p.toString)
+    def partFiles = new java.io.File(p.toString).listFiles()
+      .count(f => f.isFile && f.getName.startsWith("part-"))
+    val afterBase = partFiles
+    val keptA = Dedup.appendKeepersToStore(spark, crawlA, p.toString)
+      .collect().map(_.getLong(0)).toSet
+    assert(keptA == Set(10L))
+    // the append fragments the store: each crawl adds its own files
+    assert(partFiles > afterBase, s"append added no files ($partFiles)")
+    val fragKept = Dedup.incrementalKeepers(crawlB,
+      spark.read.parquet(p.toString)).collect().map(_.getLong(0)).toSet
+    assert(fragKept == Set(22L),
+      s"crawl B must see old AND crawl A through the store: $fragKept")
+    // compact: one data file, identical dedup results
+    val files = Dedup.compactStore(spark, p.toString)
+    assert(files == 1 && partFiles == 1, s"compacted to $files/$partFiles")
+    val compKept = Dedup.incrementalKeepers(crawlB,
+      spark.read.parquet(p.toString)).collect().map(_.getLong(0)).toSet
+    assert(compKept == fragKept)
   }
 
   test("retirement: tombstones free a duplicate; compaction folds them physically") {
@@ -97,90 +93,82 @@ class DedupSpec extends SparkSpec {
       (10L, rep("a b c")),                 // exact dup of old 1
       (11L, rep("e f d"))                  // near-dup of old 2
     ).toDF("doc_id", "text")
-    val p = java.nio.file.Files.createTempDirectory("graft-store-retire")
-    try {
-      Dedup.signatureStore(old).write.mode("overwrite").parquet(p.toString)
-      // against the full store, both crawl docs drop
-      assert(Dedup.incrementalKeepers(crawl,
+    val p = tempDir("graft-store-retire")
+    Dedup.signatureStore(old).write.mode("overwrite").parquet(p.toString)
+    // against the full store, both crawl docs drop
+    assert(Dedup.incrementalKeepers(crawl,
+      Dedup.liveStore(spark.read.parquet(p.toString)))
+      .collect().isEmpty)
+    // retire doc 1 → its exact dup (10) is keepable again, 11 still drops
+    Dedup.retireFromStore(spark, Seq(1L).toDF("doc_id"), p.toString)
+    val live = Dedup.liveStore(spark.read.parquet(p.toString))
+    assert(live.collect().map(_.getLong(0)).toSet == Set(2L))
+    val kept = Dedup.incrementalKeepers(crawl, live)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept == Set(10L), s"retired dup not freed: $kept")
+    // compaction folds the tombstone physically: the rewritten file
+    // holds only live rows (no id-1 data row, no NULL-fp tombstone)
+    // and the dedup answer is unchanged
+    Dedup.compactStore(spark, p.toString)
+    val raw = spark.read.parquet(p.toString)
+    assert(raw.count() == 1 &&
+      raw.where(col("fp").isNull).count() == 0 &&
+      raw.where(col("id") === 1L).count() == 0)
+    assert(Dedup.incrementalKeepers(crawl,
+        Dedup.liveStore(raw)).collect().map(_.getLong(0)).toSet
+      == Set(10L))
+    // append-after-compact closes the loop: the freed keeper enters
+    // the store and blocks ITS next duplicate
+    val kept2 = Dedup.appendKeepersToStore(spark, crawl, p.toString)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept2 == Set(10L))
+    assert(Dedup.incrementalKeepers(
+        Seq((20L, rep("a b c"))).toDF("doc_id", "text"),
         Dedup.liveStore(spark.read.parquet(p.toString)))
-        .collect().isEmpty)
-      // retire doc 1 → its exact dup (10) is keepable again, 11 still drops
-      Dedup.retireFromStore(spark, Seq(1L).toDF("doc_id"), p.toString)
-      val live = Dedup.liveStore(spark.read.parquet(p.toString))
-      assert(live.collect().map(_.getLong(0)).toSet == Set(2L))
-      val kept = Dedup.incrementalKeepers(crawl, live)
-        .collect().map(_.getLong(0)).toSet
-      assert(kept == Set(10L), s"retired dup not freed: $kept")
-      // compaction folds the tombstone physically: the rewritten file
-      // holds only live rows (no id-1 data row, no NULL-fp tombstone)
-      // and the dedup answer is unchanged
-      Dedup.compactStore(spark, p.toString)
-      val raw = spark.read.parquet(p.toString)
-      assert(raw.count() == 1 &&
-        raw.where(col("fp").isNull).count() == 0 &&
-        raw.where(col("id") === 1L).count() == 0)
-      assert(Dedup.incrementalKeepers(crawl,
-          Dedup.liveStore(raw)).collect().map(_.getLong(0)).toSet
-        == Set(10L))
-      // append-after-compact closes the loop: the freed keeper enters
-      // the store and blocks ITS next duplicate
-      val kept2 = Dedup.appendKeepersToStore(spark, crawl, p.toString)
-        .collect().map(_.getLong(0)).toSet
-      assert(kept2 == Set(10L))
-      assert(Dedup.incrementalKeepers(
-          Seq((20L, rep("a b c"))).toDF("doc_id", "text"),
-          Dedup.liveStore(spark.read.parquet(p.toString)))
-        .collect().isEmpty)
-    } finally graft.tools.LocalFs.deleteRec(p)
+      .collect().isEmpty)
   }
 
   test("compactChunkStore: appended window keys fold to a distinct set") {
     import spark.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-cdc-compact")
-    try {
-      // base store + an appended window that re-adds one existing key
-      Seq((1L, 2L), (3L, 4L)).toDF("h1", "h2")
-        .write.mode("overwrite").parquet(p.toString)
-      Seq((3L, 4L), (5L, 6L)).toDF("h1", "h2")
-        .write.mode("append").parquet(p.toString)
-      val files = Dedup.compactChunkStore(spark, p.toString)
-      val got = spark.read.parquet(p.toString)
-        .as[(Long, Long)].collect().toSet
-      // distinct-rewrite: the duplicate (3,4) folds; one data file
-      assert(got == Set((1L, 2L), (3L, 4L), (5L, 6L)) && files == 1)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    }
+    val p = tempDir("graft-cdc-compact")
+    // base store + an appended window that re-adds one existing key
+    Seq((1L, 2L), (3L, 4L)).toDF("h1", "h2")
+      .write.mode("overwrite").parquet(p.toString)
+    Seq((3L, 4L), (5L, 6L)).toDF("h1", "h2")
+      .write.mode("append").parquet(p.toString)
+    val files = Dedup.compactChunkStore(spark, p.toString)
+    val got = spark.read.parquet(p.toString)
+      .as[(Long, Long)].collect().toSet
+    // distinct-rewrite: the duplicate (3,4) folds; one data file
+    assert(got == Set((1L, 2L), (3L, 4L), (5L, 6L)) && files == 1)
   }
 
   test("compactStore failed swap restores the store intact") {
     import spark.implicits._
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta"))
       .toDF("doc_id", "text")
-    val p = java.nio.file.Files.createTempDirectory("graft-store-swapfail")
+    val p = tempDir("graft-store-swapfail")
       .resolve("store")
-    try {
-      Dedup.signatureStore(docs).write.mode("overwrite").parquet(p.toString)
-      val before = spark.read.parquet(p.toString).orderBy("id", "fp")
-        .collect().toSeq
-      // fail the staging → root rename (the second rename of the swap);
-      // the move-aside (root → root.compact-old) runs for real
-      val ex = intercept[graft.GraftException] {
-        Dedup.compactStoreImpl(spark, p.toString, 1,
-          (fs, a, b) =>
-            if (a.getName.endsWith(".compact-staging")) false
-            else fs.rename(a, b))
-      }
-      assert(ex.getMessage.contains("restored intact"), ex.getMessage)
-      // the store survived at its path with identical content...
-      assert(spark.read.parquet(p.toString).orderBy("id", "fp")
-        .collect().toSeq == before)
-      // ...and a subsequent healthy compaction succeeds (the preserved
-      // staging dir and the cleared aside dir don't wedge it)
-      assert(Dedup.compactStore(spark, p.toString) == 1)
-      assert(spark.read.parquet(p.toString).orderBy("id", "fp")
-        .collect().toSeq == before)
-    } finally graft.tools.LocalFs.deleteRec(p.getParent)
+    Dedup.signatureStore(docs).write.mode("overwrite").parquet(p.toString)
+    val before = spark.read.parquet(p.toString).orderBy("id", "fp")
+      .collect().toSeq
+    // fail the staging → root rename (the second rename of the swap);
+    // the move-aside (root → root.compact-old) runs for real
+    val ex = intercept[graft.GraftException] {
+      Dedup.compactStoreImpl(spark, p.toString, 1,
+        (fs, a, b) =>
+          if (a.getName.endsWith(".compact-staging")) false
+          else fs.rename(a, b))
+    }
+    assert(ex.getMessage.contains("restored intact"), ex.getMessage)
+    // the store survived at its path with identical content...
+    assert(spark.read.parquet(p.toString).orderBy("id", "fp")
+      .collect().toSeq == before)
+    // ...and a subsequent healthy compaction succeeds (the preserved
+    // staging dir and the cleared aside dir don't wedge it)
+    assert(Dedup.compactStore(spark, p.toString) == 1)
+    assert(spark.read.parquet(p.toString).orderBy("id", "fp")
+      .collect().toSeq == before)
   }
 
   test("null-text docs carry no signature and pair with nobody (ADVICE r14)") {
@@ -542,14 +530,12 @@ class DedupSpec extends SparkSpec {
       (10L, 2L, 1L, "x y z"),
       (20L, 2L, 0L, "")))
     // store round-trips through parquet unchanged
-    val p = java.nio.file.Files.createTempDirectory("graft-chunkstore-spec")
-    try {
-      store.write.mode("overwrite").parquet(p.toString)
-      val out2 = Dedup.chunkDedupIncremental(batch,
-        spark.read.parquet(p.toString), width = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      assert(out2 == Set((10L, 1L), (20L, 0L)))
-    } finally graft.tools.LocalFs.deleteRec(p)
+    val p = tempDir("graft-chunkstore-spec")
+    store.write.mode("overwrite").parquet(p.toString)
+    val out2 = Dedup.chunkDedupIncremental(batch,
+      spark.read.parquet(p.toString), width = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    assert(out2 == Set((10L, 1L), (20L, 0L)))
   }
 
   test("CDC chunking (row 115): a one-token shift defeats fixed chunks; CDC still dedups the span") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /**
  * Replays the reference README's executable transcripts (r16 verdict
  * item 7): the commands under `$ dn …` in /root/reference/README.md run
@@ -81,7 +79,7 @@ class DnCliSpec extends SparkSpec {
   }
 
   private lazy val rc = {
-    val p = Files.createTempDirectory("graft-dncli").resolve("rc")
+    val p = tempDir("graft-dncli").resolve("rc")
     Dn.runConfig(Seq("datasource-add", s"--path=$RefData", "my_logs"), p)
     p
   }
@@ -161,7 +159,7 @@ class DnCliSpec extends SparkSpec {
   test("README: index build + query flow (2250 indexed, filters, " +
       "date histogram, new metric after rebuild)") {
     assume(RefReadme.exists(), "reference checkout not present")
-    val idx = Files.createTempDirectory("graft-dncli-idx")
+    val idx = tempDir("graft-dncli-idx")
     Dn.runConfig(Seq("datasource-update", "my_logs",
       s"--index-path=$idx", "--time-field=time"), rc)
     Dn.runConfig(Seq("metric-add",
@@ -204,7 +202,7 @@ class DnCliSpec extends SparkSpec {
 
   test("curate transcript: curate-add → curate runs end-to-end with " +
       "pinned ledger+manifest content (r17 verdict item 7)") {
-    val base = Files.createTempDirectory("graft-dncli-curate")
+    val base = tempDir("graft-dncli-curate")
     val cfg = base.resolve("graftrc")
     val out = s"$base/manifest"
     val ledger = s"$base/ledger"

@@ -33,6 +33,19 @@ class DnSpec extends SparkSpec {
     }
   }
 
+  test("a parquet --data read again in one session starts no schema-inference job") {
+    val dir = tempDir("graft-dn-parquet").toString
+    spark.range(10).selectExpr("id", "cast(id % 3 as string) as k")
+      .write.parquet(s"$dir/t.parquet")
+    def scan() = Dn.run(spark, Seq("scan", s"--data=$dir/t.parquet", "--breakdowns=k"))
+    val (first, inferJobs) = jobsDuring(scan())
+    assert(inferJobs > 0, "the first read infers the footer schema")
+    val (second, jobs) = jobsDuring(scan())
+    assert(jobs == 0)
+    assert(second.collect().toSeq.map(_.toString).sorted ==
+      first.collect().toSeq.map(_.toString).sorted)
+  }
+
   test("build + query round-trips through a default metric") {
     val idx = tempDir("graft-dn-index").toString
     Dn.run(spark, Seq("build", s"--data=$events", s"--index=$idx",

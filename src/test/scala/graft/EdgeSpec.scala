@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
@@ -31,7 +29,7 @@ class EdgeSpec extends SparkSpec {
   }
 
   test("index built over empty input answers 0") {
-    val path = Files.createTempDirectory("graft-empty-index").toString
+    val path = tempDir("graft-empty-index").toString
     val metric = Metric("m", Seq(FieldSpec.plain("host")))
     val empty = df.where(col("host") === "nope")
       .withColumn("ts", org.apache.spark.sql.functions.current_timestamp())

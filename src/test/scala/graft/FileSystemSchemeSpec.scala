@@ -25,7 +25,7 @@ class FileSystemSchemeSpec extends SparkSpec {
   import spark.implicits._
 
   private def fileRoot(tag: String): String =
-    "file://" + java.nio.file.Files.createTempDirectory(s"graft-fss-$tag")
+    "file://" + tempDir(s"graft-fss-$tag")
       .toString
 
   private def fsOf(root: String): FileSystem =

@@ -47,8 +47,7 @@ class FuzzSpec extends SparkSpec {
       "tools/check.py not found — test JVM not rooted at the repo")
     val base = new java.io.File(sf001)
     assume(base.isDirectory, "driver testdata not present")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fuzzspec").toString
+    val dir = tempDir("graft-fuzzspec").toString
     graft.tools.FuzzCorpus.generate(spark, sf001, s"$dir/corpus")
     // per-query store artifacts under /tmp are keyed by (dir,
     // fingerprint) — the fresh temp dir never collides with a stale

@@ -44,8 +44,7 @@ class LocalClusterSpec extends SparkSpec {
     val checker = new java.io.File("tools/check.py")
     assume(checker.exists(), "tools/check.py not found")
 
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-lc-spec").toString
+    val out = tempDir("graft-lc-spec").toString
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val pb = new ProcessBuilder((Seq(javaBin,
       "-Xmx2g",

@@ -344,7 +344,7 @@ class PlanShapeSpec extends SparkSpec {
     // shuffle join at all (the probe set broadcasts).
     val embT = graft.sources.Sources.table(spark, sf001, "embeddings")
     val cents = graft.ann.Ann.ivfCentroids(embT)
-    val dir = java.nio.file.Files.createTempDirectory("graft-filt").toString
+    val dir = tempDir("graft-filt").toString
     graft.ann.Ann.ivfAssign(embT, cents, keep = Seq("label"))
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val served = graft.ann.Ann.ivfTopKAssigned(

@@ -104,8 +104,7 @@ class QueryFuzzSpec extends SparkSpec {
       .flatMap(_.toLongOption).getOrElse(19L)
     val r = new Random(seed)
     val events = graft.sources.Sources.events(spark, sf001)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-queryfuzz").toString
+    val out = tempDir("graft-queryfuzz").toString
     val oracle = Seq.newBuilder[(String, String)]
     (0 until NConfigs).foreach { i =>
       val cfg = config(r)

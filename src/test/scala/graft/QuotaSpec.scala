@@ -107,8 +107,7 @@ class QuotaSpec extends SparkSpec {
   }
 
   test("writeShardsQuota members carry source and respect quotas") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-quota-spec").toString
+    val root = tempDir("graft-quota-spec").toString
     Corpus.writeShardsQuota(docs, root, Seq("a" -> 10L, "c" -> 50L),
       seqLen = 4, shards = 2)
     val members = spark.read.parquet(s"$root/members")

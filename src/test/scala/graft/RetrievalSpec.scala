@@ -117,7 +117,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag").toString
 
   test("lexicon serve == scan topK bit-for-bit on the matching population") {
     val terms = Seq("spark", "merge")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -38,7 +37,7 @@ class RocksDbStateSpec extends SparkSpec {
       val agg = StreamScan.scanStream(input.toDF().toDF("ts", "event_type"),
         QueryConfig(breakdowns = Seq(FieldSpec.plain("event_type"))),
         timeCol = "ts", windowDur = "1 hour", watermarkDelay = "0 seconds")
-      val ckpt = Files.createTempDirectory("graft-rocksdb").toString
+      val ckpt = tempDir("graft-rocksdb").toString
       val q = agg.writeStream.format("memory").queryName("t_rocks")
         .option("checkpointLocation", ckpt)
         .outputMode("complete").start()

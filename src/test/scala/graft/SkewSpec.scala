@@ -38,8 +38,7 @@ class SkewSpec extends SparkSpec {
     assume(checker.exists(),
       "tools/check.py not found — test JVM not rooted at the repo")
     assume(new java.io.File(sf001).isDirectory, "driver testdata not present")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skewspec").toString
+    val dir = tempDir("graft-skewspec").toString
     graft.tools.MakeSkew.generate(spark, sf001, s"$dir/corpus")
 
     // skew anatomy: the profile actually skews

@@ -17,7 +17,7 @@ class SliceCountSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-slicecnt").toString
+    tempDir("graft-slicecnt").toString
 
   private def mkEmb(rows: Seq[(Long, Seq[Float], Long)]) =
     rows.toDF("vec_id", "embedding", "label")

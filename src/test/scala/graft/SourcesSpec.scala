@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, StandardOpenOption}
 import java.time.Instant
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -135,30 +134,6 @@ class SourcesSpec extends SparkSpec {
     assert(Scan.scan(df, cfg).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("GET" -> 1L, "PUT" -> 1L))
-  }
-
-  /** `body`'s result and the Spark jobs started while it ran. Listener
-    * events arrive in order, so once a marker job run after `body` is
-    * seen, every job `body` started has been counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val Marker = "graft-sources-spec-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Marker))
-          marked.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(Marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(marked.await(1, java.util.concurrent.TimeUnit.MINUTES))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted

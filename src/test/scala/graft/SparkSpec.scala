@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.LocalFs
 
 /** Shared local SparkSession for all suites (getOrCreate → one JVM-wide
   * session, tests stay fast). */
@@ -21,30 +24,53 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  /** Best effort: a dir that cannot be removed never fails the suite. */
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events arrive in order, so once a marker job run after `body` is
+    * seen, every job `body` started has been counted. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val Marker = "graft-spec-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Marker))
+          marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(marked.await(1, java.util.concurrent.TimeUnit.MINUTES))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Best effort: a dir that cannot be removed never fails the suite.
+    * The artifacts cached from a temp dir or its subdirs go with it:
+    * their key is new each run, so no later build would sweep them. */
   override def afterAll(): Unit =
     try tempDirs.synchronized(tempDirs.foreach { d =>
-      try graft.tools.LocalFs.deleteRec(d)
-      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      val key = LocalFs.dirKey(d.toString)
+      val artifacts = Option(new java.io.File(LocalFs.TmpRoot).listFiles).toSeq.flatten
+        .filter(_.getName.startsWith("graft-"))
+        .flatMap(kind => Option(kind.listFiles).toSeq.flatten)
+        .filter(a => a.getName.startsWith(s"$key-") || a.getName.startsWith(s"${key}_"))
+      (d +: artifacts.map(_.toPath)).foreach { p =>
+        try LocalFs.deleteRec(p)
+        catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      }
     })
     finally super.afterAll()
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // per-group warehouse: suites run in concurrently forked JVM
-      // groups (build.sbt Test/testGrouping), each with its own
-      // graft.tmp.root, so bucketed-table writes from two groups never
-      // collide, and a group reuses its one directory run after run
-      .config("spark.sql.warehouse.dir",
-        s"${graft.tools.LocalFs.TmpRoot}/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // per-group warehouse: suites run in concurrently forked JVM groups
+    // (build.sbt Test/testGrouping), each with its own graft.tmp.root
+    val s = Session.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -63,7 +63,7 @@ class StreamCrashSpec extends SparkSpec {
       "checkpoint to the batch answer; a corrupted checkpoint fails " +
       "loudly, never an empty-state wrong answer") {
     assume(new java.io.File(sf001).isDirectory, "driver testdata not present")
-    val work = Files.createTempDirectory("graft-stream-crash").toString
+    val work = tempDir("graft-stream-crash").toString
     // input: (user_id, sec) split into 24 files → 24 micro-batches
     // under maxFilesPerTrigger=1; users recur across files, so per-key
     // state genuinely carries across the crash boundary

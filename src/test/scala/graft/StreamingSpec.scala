@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -102,7 +101,7 @@ class StreamingSpec extends SparkSpec {
     val agg = StreamScan.scanStream(df,
       QueryConfig(breakdowns = Seq(FieldSpec.plain("event_type"))),
       timeCol = "ts", windowDur = "1 hour", watermarkDelay = "0 seconds")
-    val dir = Files.createTempDirectory("graft-stream-index")
+    val dir = tempDir("graft-stream-index")
     val q = StreamScan.indexSink(agg, s"$dir/idx", s"$dir/ckpt")
     try {
       input.addData((ts("2024-01-01T00:10:00Z"), "click"))
@@ -129,7 +128,7 @@ class StreamingSpec extends SparkSpec {
     val agg = StreamScan.scanStream(df,
       QueryConfig(breakdowns = Seq(FieldSpec.plain("event_type"))),
       timeCol = "ts", windowDur = "1 hour", watermarkDelay = "0 seconds")
-    val dir = Files.createTempDirectory("graft-stream-compact")
+    val dir = tempDir("graft-stream-compact")
     // sink straight into the by_day tree so batch Index.query serves it
     val root = s"$dir/idx"
     val metric = graft.index.Index.Metric("m",
@@ -182,7 +181,7 @@ class StreamingSpec extends SparkSpec {
     // and both sketch states (bloom pair set, quantile histogram)
     // must equal their batch-computed twins exactly.
     import graft.functions.XHash
-    val base = Files.createTempDirectory("graft-micro").toString
+    val base = tempDir("graft-micro").toString
     val words = Seq("alpha beta gamma delta", "epsilon zeta eta theta",
       "iota kappa lambda mu", "nu xi omicron pi rho sigma")
     (0 until 4).foreach { i =>
@@ -236,7 +235,7 @@ class StreamingSpec extends SparkSpec {
     // EXACTLY one row per distinct chunk key seen — a leak shows as
     // state_rows > distinct, a loss as <, and repeated chunks across
     // batches (doc 30 repeats doc 0's text) must not re-admit.
-    val base = Files.createTempDirectory("graft-cdcstate").toString
+    val base = tempDir("graft-cdcstate").toString
     val texts = Seq(
       "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4,
       "lambda mu nu xi omicron pi rho sigma tau upsilon " * 4,
@@ -286,7 +285,7 @@ class StreamingSpec extends SparkSpec {
     val dir = sf001
     val d = graft.sources.Sources.table(spark, dir, "documents")
     val crawl = d.where(expr(DedupQueries.NewWhere))
-    val base = Files.createTempDirectory("graft-admission").toString
+    val base = tempDir("graft-admission").toString
     crawl.repartition(4).write.parquet(s"$base/in")
     val raw = spark.read.parquet(s"$base/in")
     val stream = spark.readStream.schema(raw.schema)
@@ -337,7 +336,7 @@ class StreamingSpec extends SparkSpec {
     val segs = spark.read.parquet(s"$root/segs")
     val d = graft.sources.Sources.table(spark, dir, "documents")
     val crawl = d.where(expr(DedupQueries.NewWhere))
-    val base = Files.createTempDirectory("graft-ppl").toString
+    val base = tempDir("graft-ppl").toString
     crawl.repartition(4).write.parquet(s"$base/in")
     val raw = spark.read.parquet(s"$base/in")
     val stream = spark.readStream.schema(raw.schema)
@@ -368,7 +367,7 @@ class StreamingSpec extends SparkSpec {
     val dir = sf001
     val d = graft.sources.Sources.table(spark, dir, "documents")
     val crawl = d.where(expr(DedupQueries.NewWhere))
-    val base = Files.createTempDirectory("graft-urlf").toString
+    val base = tempDir("graft-urlf").toString
     crawl.repartition(4).write.parquet(s"$base/in")
     val raw = spark.read.parquet(s"$base/in")
     val stream = spark.readStream.schema(raw.schema)
@@ -418,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     val dir = sf001
     val d = graft.sources.Sources.table(spark, dir, "documents")
     val crawl = d.where(!DedupQueries.isEval)
-    val base = Files.createTempDirectory("graft-splitg").toString
+    val base = tempDir("graft-splitg").toString
     crawl.repartition(4).write.parquet(s"$base/in")
     val raw = spark.read.parquet(s"$base/in")
     val stream = spark.readStream.schema(raw.schema)

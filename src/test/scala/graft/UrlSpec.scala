@@ -116,7 +116,7 @@ class UrlSpec extends SparkSpec {
     val bulk = (0 until 8800).flatMap { i =>
       if (i % 40 == 0) Seq(s"*.w$i.zz", s"!ok.w$i.zz") else Seq(s"s$i.zz")
     }
-    val f = java.io.File.createTempFile("psl9k", ".dat")
+    val f = tempDir("psl9k").resolve("psl.dat").toFile
     java.nio.file.Files.write(f.toPath,
       (scala.jdk.CollectionConverters.ListHasAsScala(
         java.nio.file.Files.readAllLines(
@@ -162,7 +162,7 @@ class UrlSpec extends SparkSpec {
   }
 
   test("PSL: load() parses the artifact file identically to fromLines") {
-    val f = java.io.File.createTempFile("psl", ".dat")
+    val f = tempDir("psl").resolve("psl.dat").toFile
     val lines = Seq("// The PSL fixture as a config artifact",
       "co.uk", "*.ck", "!www.ck", "")
     java.nio.file.Files.write(f.toPath,
