@@ -89,12 +89,13 @@ object Bench {
     // window is the one number that separates "the code regressed"
     // from "the hypervisor starved the VM" (r19's 622 s run; this
     // round measured 3.6% average steal with multi-minute bursts).
-    def cpuJiffies(): Option[(Long, Long)] = try {
-      val l = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1)
-        .map(_.toLong)
-      Some((l.sum, l(7))) // (total, steal)
-    } catch { case _: Throwable => None }
+    def cpuJiffies(): Option[(Long, Long)] =
+      scala.util.Using(scala.io.Source.fromFile("/proc/stat")) { src =>
+        val l = src.getLines()
+          .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1)
+          .map(_.toLong)
+        (l.sum, l(7)) // (total, steal)
+      }.toOption
     val jiffies0 = cpuJiffies()
     val boxEvidence: String = {
       val la = try {

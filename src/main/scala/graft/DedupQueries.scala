@@ -470,8 +470,6 @@ object DedupQueries {
     Q("dedup_banding_recall",
       (s, dir) => {
         val d = docs(s, dir)
-        val all = org.apache.spark.sql.expressions.Window
-          .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
         // truth_exact_ok: the ground truth's TruthDfCap is documented
         // as linearity armor that never BINDS at the gated scales —
         // assert that, so the "exact" in the contract stays literal: if
@@ -489,14 +487,18 @@ object DedupQueries {
         val capOk = dfc
           .agg((max(col("nd")) <= lit(Dedup.TruthDfCap.toLong))
             .as("truth_exact_ok"))
-        Dedup.exactNearDupPairsFromRows(shd0, dfc)
+        val truth = Dedup.exactNearDupPairsFromRows(shd0, dfc)
           .join(Dedup.minhashCandidates(d)
             .withColumn("caught", lit(true)), Seq("doc_a", "doc_b"), "left")
           .select(col("doc_a"), col("doc_b"), col("jaccard"),
             coalesce(col("caught"), lit(false)).as("caught"))
-          .withColumn("recall_ok",
-            sum(when(col("caught"), 1L).otherwise(0L)).over(all) * 1000 >=
-              lit(Dedup.MinBandingRecallPerMille) * count(lit(1)).over(all))
+          .localCheckpoint()
+        // one aggregate row broadcast back, not a partitionless window
+        // that would gather every truth pair into one task
+        val recallOk = truth.agg(
+          (sum(when(col("caught"), 1L).otherwise(0L)) * 1000 >=
+            lit(Dedup.MinBandingRecallPerMille) * count(lit(1))).as("recall_ok"))
+        truth.crossJoin(broadcast(recallOk))
           .crossJoin(broadcast(capOk))
           .orderBy(col("doc_a"), col("doc_b"))
       },

@@ -32,25 +32,6 @@ object IndexQueries {
     * interval (the tag), all under one fingerprint. */
   private val Events = Seq("events.parquet")
 
-  /** Recursive delete for the compact-roundtrip scratch tree. */
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    graft.tools.LocalFs.deleteRec(p)
-
-  /** One scratch root per JVM for compact_roundtrip, wiped at exit —
-    * Bench runs the query twice and Verify once more, so a plain
-    * createTempDirectory would leak a written-out index tree per run.
-    * Each invocation gets a fresh NUMBERED subdirectory instead of
-    * wiping the shared root eagerly: a harness that re-evaluates a
-    * previously returned DataFrame (or runs queries concurrently) must
-    * not find its files deleted mid-flight by a newer invocation. */
-  private lazy val compactRoot: java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-compact-rt-${ProcessHandle.current().pid()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p)))
-    p
-  }
-  private val compactSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** TWO metrics under one index root — dragnet's index configs carry
     * several metrics and the query planner picks the cheapest covering
     * one (lib/dragnet-impl.js metric selection). `by_type` is the
@@ -190,13 +171,8 @@ object IndexQueries {
     // losslessness.
     Q("compact_roundtrip",
       (s, dir) => {
-        // fresh numbered tree per run (compaction mutates in place),
-        // all under ONE per-process root wiped at exit — no /tmp leak,
-        // and no eager wipe that could yank a prior invocation's files
-        // out from under a still-held DataFrame.
-        val sub = compactRoot.resolve(s"run-${compactSeq.incrementAndGet()}")
-        java.nio.file.Files.createDirectories(sub)
-        val tmp = sub.toString
+        // fresh tree per run: compaction mutates in place
+        val tmp = graft.tools.LocalFs.scratchDir("compact-rt").toString
         val mp = Index.metricPath(tmp, "day", metrics.head.name)
         Index.scanRows(Sources.events(s, dir), metrics.head, "ts", "day")
           // round-robin, deliberately NOT by dn_date: each of the 8

@@ -186,8 +186,7 @@ object StreamingQueries {
         val agg = graft.streaming.StreamScan.scanStream(stream,
           QueryConfig(breakdowns = Seq(FieldSpec.plain("event_type"))),
           timeCol = "ts", windowDur = "1 day", watermarkDelay = "0 seconds")
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-stream-idx").toString
+        val tmp = graft.tools.LocalFs.scratchDir("stream-idx").toString
         val key = "spark.sql.shuffle.partitions"
         val prev = s.conf.get(key)
         s.conf.set(key, "8")

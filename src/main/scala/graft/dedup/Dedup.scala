@@ -128,12 +128,20 @@ object Dedup {
         windowsOf(Text.tokens(col(textCol)), n).as("ws"))
       .select(col("id"), posexplode(col("ws")).as(Seq("i", "s")))
 
-  /** Per-doc shingle SETS (one tokenize+shingle pass, collect_set per
-    * doc) — the shared input of the signature and verify stages. */
+  /** A document's shingle SET, sorted: [[shingles]] under `sort_array`,
+    * the form the [[jaccard]] kernel merges without a copy.
+    * (`sort_array` is a generated-code sort; `array_sort` would run its
+    * default comparator lambda in the interpreter per comparison.) */
+  def shingleSet(text: Column, n: Int = ShingleN): Column =
+    sort_array(shingles(text, n))
+
+  /** Per-doc sorted shingle SETS `(id, sh)`, one row per input row: a
+    * per-document projection, no explode and no shuffle. Docs with no
+    * shingle (NULL text, no token) have no row. */
   def shingleSets(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame =
-    shingleRows(docs, idCol, textCol, n)
-      .groupBy(col("id")).agg(collect_set(col("s")).as("sh"))
+    docs.select(col(idCol).as("id"), shingleSet(col(textCol), n).as("sh"))
+      .where(size(col("sh")) > 0)
 
   /**
    * Per-doc MinHash signature columns m0..m{k-1}. Duplicate shingles
@@ -152,20 +160,33 @@ object Dedup {
    * per member column.
    */
   def minhashSignature(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3, k: Int = 16): DataFrame = {
+      textCol: String = "text", n: Int = 3, k: Int = 16): DataFrame =
+    signed(docs, idCol, textCol, n, k, withSet = false)
+
+  /** [[minhashSignature]]'s rows, plus the doc's sorted shingle set `sh`
+    * when `withSet`. The tokens are projected once and both per-doc
+    * values are built from them behind the one explode barrier. */
+  private def signed(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, withSet: Boolean): DataFrame = {
+    val toks = col("toks")
     val sig = org.apache.spark.sql.graft.bridge.column(
       graft.functions.ShingleMinHashSig(
-        org.apache.spark.sql.graft.bridge.expression(
-          Text.tokens(col(textCol))), n, k))
-    docs.select(col(idCol).as("id"), explode(array(sig)).as("sigarr"))
+        org.apache.spark.sql.graft.bridge.expression(toks), n, k))
+    val setIn =
+      if (withSet) Seq(sort_array(array_distinct(windowsOf(toks, n))).as("sh"))
+      else Nil
+    val setOut = if (withSet) Seq(col("d.sh").as("sh")) else Nil
+    docs.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("toks"))
+      .select(col("id"), explode(array(struct(sig.as("sig") +: setIn: _*))).as("d"))
       // NULL-text docs: the kernel is null-in-null-out, and explode of
       // array(NULL) EMITS the row (unlike the pre-fusion explode over
       // sequence(NULL), which dropped it) — filter it here, or every
       // null-text doc would share the all-null band buckets and pair
-      // with every other one (DedupSpec pins the no-signature contract)
-      .where(col("sigarr").isNotNull)
-      .select(col("id") +: (0 until k).map(i =>
-        element_at(col("sigarr"), i + 1).as(s"m$i")): _*)
+      // with every other one (DedupSpec pins the no-signature contract).
+      // Zero-token docs have a NULL signature too, and an empty set.
+      .where(col("d.sig").isNotNull)
+      .select((col("id") +: setOut) ++
+        (0 until k).map(i => element_at(col("d.sig"), i + 1).as(s"m$i")): _*)
   }
 
   /**
@@ -1009,38 +1030,36 @@ object Dedup {
         col("n_slots").cast("long").as("n_slots"))
   }
 
-  /** Exact Jaccard similarity of two shingle-set columns. */
+  /** Exact Jaccard similarity of two shingle-set columns: one native
+    * merge per pair ([[graft.functions.SetJaccard]]). Sorted distinct
+    * sets ([[shingleSet]], [[shingleSets]]) merge as they stand; any
+    * other array is sorted and deduplicated in a copy, so the value is
+    * `size(array_intersect(a, b)) / greatest(size(array_union(a, b)), 1)`
+    * for every input, NULL elements included. */
   def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      greatest(size(array_union(a, b)), lit(1)).cast("double")
+    org.apache.spark.sql.graft.bridge.column(
+      graft.functions.SetJaccard(
+        org.apache.spark.sql.graft.bridge.expression(a),
+        org.apache.spark.sql.graft.bridge.expression(b)))
 
   /**
-   * Verify pass: exact n-gram Jaccard over MinHash candidate pairs.
-   * Candidates shuffle twice (once per side) to pick up their shingle
-   * sets — still linear in |candidates|, never corpus².
+   * Verify pass: exact n-gram Jaccard over the MinHash candidate pairs.
+   * Per document, ONE projection over its tokens yields both the
+   * [[minhashSignature]] minima (for the banding) and the sorted shingle
+   * set (for the verify); that frame is cut once, so the pair set is
+   * [[minhashCandidates]]' pair set by construction. Candidates then
+   * join twice (once per side) to pick up their sets — linear in
+   * |candidates|, never corpus² — and each pair is scored by the
+   * [[jaccard]] merge. No shingle rows, no groupBy: the only shuffles
+   * are the band buckets' and the two joins'. Docs with no shingle are
+   * in no pair.
    */
   def jaccardVerified(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3,
       minJaccard: Double = MinJaccard): DataFrame = {
-    // ONE tokenize+shingle pass AND one aggregation, materialized: the
-    // per-doc shingle SET (for the verify joins) and the 16 signature
-    // minima (for the banding) fold in the SAME groupBy — min over the
-    // occurrence multiset == min over the set, so hashing pre-aggregation
-    // is bit-identical to the old explode-the-set second pass while
-    // removing that pass's extra exchange and checkpoint (r19: the
-    // checkpointed set frame loses its partitioning, so the old
-    // signature groupBy paid a fresh corpus-sized shuffle).
-    val k = 16
-    val rows = shingleRows(docs, idCol, textCol, n)
-      .select(col("id"), col("s"),
-        XHash.h60(col("s")).as("h1"), XHash.h56(col("s")).as("h2"))
-    val members = rows.select(col("id") +: col("s") +: (0 until k).map(i =>
-      XHash.member(col("h1"), col("h2"), i).as(s"h$i")): _*)
-    val sh = members.groupBy(col("id"))
-      .agg(collect_set(col("s")).as("sh"),
-        (0 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*).lineageCut
-    candidatesOfSignature(
-      sh.select(col("id") +: (0 until k).map(i => col(s"m$i")): _*), 8, 2)
+    val sh = signed(docs, idCol, textCol, n, Bands * RowsPerBand,
+      withSet = true).lineageCut
+    candidatesOfSignature(sh.drop("sh"), Bands, RowsPerBand)
       .join(sh.as("sa"), col("doc_a") === col("sa.id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.id"))
       .select(col("doc_a"), col("doc_b"),

@@ -113,6 +113,25 @@ object LocalFs {
       .foreach(n => deleteRec(live.resolveSibling(n)))
   }
 
+  /** One scratch root per JVM under `java.io.tmpdir`, removed at exit
+    * by a shutdown hook. */
+  lazy val ScratchRoot: Path = {
+    val p = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft-scratch-${ProcessHandle.current().pid()}")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p)))
+    p
+  }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** A new, empty, numbered dir `<name>-<n>` under [[ScratchRoot]], for
+    * a query that writes a tree and returns a DataFrame that reads it
+    * lazily. The tree lives until the JVM exits: deleting it eagerly
+    * (or wiping the root per run) would pull the files out from under
+    * a DataFrame a caller still holds or re-evaluates. */
+  def scratchDir(name: String): Path =
+    Files.createDirectories(
+      ScratchRoot.resolve(s"$name-${scratchSeq.incrementAndGet()}"))
+
   /** Recursive delete; missing path is a no-op. */
   def deleteRec(p: Path): Unit =
     if (Files.exists(p)) {

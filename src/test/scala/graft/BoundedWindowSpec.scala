@@ -31,6 +31,15 @@ import org.apache.spark.sql.functions._
   *    the dataset's date span, not its row count.
   *  - TextQueries.scala (1): text_token_hist's cumulative sum rides
   *    the same ≤201-row kc histogram as tokenBudget.
+  *  - ann/Permute.scala (1): permutation's energy rank runs over one
+  *    row per embedding COORDINATE (post-groupBy(pos)), ≤ Dim = 64.
+  *  - AnnQueries.scala (3): recallGate's and recallGate2's batch hit
+  *    totals run over one row per query id of the gate's fixed query
+  *    batch (queryBatch's nq lowest-id vectors); rotatedBalance's
+  *    max shares run over 4 rows, one per PQ subspace.
+  *
+  * The scan reads whole files, so a constructor wrapped across lines
+  * (`...Window` then `.partitionBy()` on the next line) counts.
   */
 class BoundedWindowSpec extends SparkSpec {
 
@@ -39,26 +48,16 @@ class BoundedWindowSpec extends SparkSpec {
     "dedup/Corpus.scala" -> 3,
     "RetrievalQueries.scala" -> 8,
     "AnalyticsQueries.scala" -> 1,
-    "TextQueries.scala" -> 1)
+    "TextQueries.scala" -> 1,
+    "ann/Permute.scala" -> 1,
+    "AnnQueries.scala" -> 3)
 
   test("every partitionless window site is registered with a bound") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getCanonicalPath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val pat = java.util.regex.Pattern.compile(
-      """Window\s*\.\s*(orderBy\s*\(|partitionBy\s*\(\s*\))""")
-    val found: Map[String, Int] = walk(root).flatMap { f =>
-      val rel = f.getPath.stripPrefix("src/main/scala/graft/")
-      scala.io.Source.fromFile(f, "UTF-8").getLines()
-        .map(_.trim)
-        // constructor sites only: prose mentions in comments don't count
-        .filterNot(l => l.startsWith("//") || l.startsWith("*"))
-        .filter(l => pat.matcher(l).find())
-        .map(_ => rel)
-        .toList
-    }.groupBy(identity).map { case (k, v) => k -> v.size }
+    // whole-file match: a constructor wrapped as `Window\n  .orderBy(`
+    // is a site too; prose mentions in comments are not
+    val found: Map[String, Int] = SparkSpec.sourceMatches("src/main/scala/graft",
+        """Window\s*\.\s*(orderBy\s*\(|partitionBy\s*\(\s*\))""")
+      .groupBy(_.file).map { case (k, v) => k -> v.size }
     assert(found == registry,
       s"partitionless Window sites drifted from the audited registry.\n" +
         s"found:    ${found.toSeq.sorted}\nexpected: ${registry.toSeq.sorted}\n" +

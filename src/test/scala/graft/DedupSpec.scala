@@ -876,4 +876,131 @@ class DedupSpec extends SparkSpec {
     assert(out.exists(_._5), "vacuous: quality argmax == min id always")
     assert(out.exists(!_._5), "suspicious: min id never optimal")
   }
+
+  // ---- per-document verify: the SetJaccard kernel and the plan it
+  // replaced ----
+
+  /** The Jaccard formula the kernel replaced, verbatim. */
+  private def oldJaccard(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    size(array_intersect(a, b)).cast("double") /
+      greatest(size(array_union(a, b)), lit(1)).cast("double")
+  }
+
+  test("SetJaccard == size(array_intersect)/greatest(size(array_union),1), " +
+      "codegen and interpreted, on unsorted, duplicate, empty and null input") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val strs = ArrayType(StringType, containsNull = true)
+    val elem: Gen[String] = Gen.frequency(
+      8 -> Gen.oneOf("a", "b", "c", "ab", "a b", "", "naïve", "Zz"),
+      1 -> Gen.const(null))
+    val arr: Gen[Seq[String]] = Gen.frequency(
+      6 -> Gen.listOf(elem),                                  // any order, dups, nulls
+      3 -> Gen.someOf("a", "b", "c", "ab", "a b", "naïve").map(_.toSeq.sorted),
+      1 -> Gen.const(Seq.empty[String]),
+      1 -> Gen.const(null))
+    val batch = Gen.listOfN(40, Gen.zip(arr, arr))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25),
+      Prop.forAll(batch) { pairs =>
+        val rows = pairs.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }
+        val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+            StructType(Seq(StructField("i", IntegerType),
+              StructField("a", strs), StructField("b", strs))))
+          // past the local relation, so the projection is generated code
+          // rather than folded by the optimizer
+          .repartition(2)
+          .select(col("i"), Dedup.jaccard(col("a"), col("b")).as("kern"),
+            oldJaccard(col("a"), col("b")).as("old"))
+        val got = df.collect().map(r => r.getInt(0) ->
+          (Option(r.get(1)), Option(r.get(2)))).toMap
+        pairs.indices.forall { i =>
+          val (a, b) = pairs(i)
+          val interp = graft.functions.SetJaccard(Literal.create(a, strs),
+            Literal.create(b, strs)).eval()
+          val (kern, old) = got(i)
+          val ok = kern == old && Option(interp) == old
+          if (!ok) println(s"SetJaccard drift on $a vs $b: kern=$kern interp=$interp old=$old")
+          ok
+        }
+      })
+    assert(res.passed, res.status.toString)
+  }
+
+  /** The hostile edge corpus: NULL text, empty and whitespace-only docs,
+    * docs shorter than n tokens, case and spacing copies, duplicates —
+    * next to real documents. */
+  private lazy val edgeCorpus = {
+    import spark.implicits._
+    val edges = Seq(
+      (90001L, null.asInstanceOf[String]), (90002L, null.asInstanceOf[String]),
+      (90003L, ""), (90004L, ""), (90005L, " \t\n "), (90006L, "   "),
+      (90007L, "one"), (90008L, "ONE"), (90009L, "one two"),
+      (90010L, "One  Two"), (90011L, "one two three"),
+      (90012L, "one two three"), (90013L, "a b a b a b a b"),
+      (90014L, "b a b a b a b a"), (90015L, "naïve café über tokens"),
+      (90016L, "Naïve  café über tokens"))
+      .toDF("doc_id", "text")
+    graft.sources.Sources.table(spark, sf001, "documents")
+      .select(col("doc_id"), col("text")).unionByName(edges)
+  }
+
+  /** The verify plan before the per-document kernels, verbatim: one row
+    * per shingle, 16 hash-member columns, `groupBy(id)` with
+    * `collect_set` and 16 `min`s, and the array_intersect/array_union
+    * Jaccard. */
+  private def oldJaccardVerified(d: org.apache.spark.sql.DataFrame,
+      minJaccard: Double): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.functions.XHash
+    import graft.plans.Lineage.LineageOps
+    val k = 16
+    val rows = Dedup.shingleRows(d)
+      .select(col("id"), col("s"),
+        XHash.h60(col("s")).as("h1"), XHash.h56(col("s")).as("h2"))
+    val members = rows.select(col("id") +: col("s") +: (0 until k).map(i =>
+      XHash.member(col("h1"), col("h2"), i).as(s"h$i")): _*)
+    val sh = members.groupBy(col("id"))
+      .agg(collect_set(col("s")).as("sh"),
+        (0 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*).lineageCut
+    Dedup.candidatesOfSignature(
+      sh.select(col("id") +: (0 until k).map(i => col(s"m$i")): _*), 8, 2)
+      .join(sh.as("sa"), col("doc_a") === col("sa.id"))
+      .join(sh.as("sb"), col("doc_b") === col("sb.id"))
+      .select(col("doc_a"), col("doc_b"),
+        oldJaccard(col("sa.sh"), col("sb.sh")).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
+  }
+
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(t => (t._1, t._2)).toSeq
+
+  test("jaccardVerified == the explode/collect_set plan it replaced, " +
+      "edge corpus, at minJaccard 0.6 and 0.0") {
+    for (mj <- Seq(0.6, 0.0)) {
+      val got = triples(Dedup.jaccardVerified(edgeCorpus, minJaccard = mj))
+      val want = triples(oldJaccardVerified(edgeCorpus, mj))
+      assert(got == want, s"minJaccard=$mj: ${got.diff(want).take(5)} vs " +
+        s"${want.diff(got).take(5)}")
+      // non-vacuous: exact copies, near-dups and (at 0.0) weak pairs
+      assert(got.exists(_._3 == 1.0) && got.exists(t => t._3 < 1.0))
+    }
+  }
+
+  test("every verified pair is a minhashCandidates pair; no zero-shingle " +
+      "doc is in any") {
+    val cands = Dedup.minhashCandidates(edgeCorpus).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val all = triples(Dedup.jaccardVerified(edgeCorpus, minJaccard = 0.0))
+      .map(t => (t._1, t._2)).toSet
+    assert(all == cands, s"${(all -- cands).take(5)} / ${(cands -- all).take(5)}")
+    val kept = triples(Dedup.jaccardVerified(edgeCorpus)).map(t => (t._1, t._2))
+    assert(kept.nonEmpty && kept.forall(cands))
+    val noShingle = (90001L to 90006L).toSet
+    assert(!all.exists(p => noShingle(p._1) || noShingle(p._2)))
+  }
 }

@@ -191,25 +191,13 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("every JSON read in src/main goes through the one memoized reader in Sources") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getCanonicalPath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val pat = java.util.regex.Pattern.compile("""\.json\s*\(""")
-    val sites: Seq[(String, String)] = walk(root).flatMap { f =>
-      val rel = f.getPath.stripPrefix("src/main/scala/graft/")
-      scala.io.Source.fromFile(f, "UTF-8").getLines()
-        .map(_.trim)
-        // call sites only: prose in comments and JSON writers don't count
-        .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.contains(".write"))
-        .filter(l => pat.matcher(l).find())
-        .map(l => rel -> l)
-        .toList
-    }
+    // a writer chain (`.write…json(`) matches as a whole and is no read
+    val writer = """\.write(\s*\.\s*\w+\s*\([^()]*\))*\s*\.\s*json\s*\("""
+    val reader = """_?\.\s*json\s*\("""
+    val sites = SparkSpec.sourceMatches("src/main/scala/graft", s"$writer|$reader")
+      .filterNot(_.text.startsWith(".write"))
     // the one site is the loader that Sources.readNdjson hands to memoRead
-    assert(sites.map(_._1) == Seq("sources/Sources.scala") &&
-      sites.forall(_._2.startsWith("_.json(")),
+    assert(sites.map(s => (s.file, s.text)) == Seq("sources/Sources.scala" -> "_.json("),
       s"JSON read sites outside the memoized reader: ${sites.mkString("; ")}\n" +
         "Read ndjson through Sources.ndjson / dateLayout / timeFormatLayout, " +
         "so its schema is inferred once per selection.")

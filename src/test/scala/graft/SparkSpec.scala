@@ -67,6 +67,69 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+
+  /** One match of a source gate's pattern: the file's path under the
+    * scanned root, the 1-based line the match starts on, and the text. */
+  case class SourceMatch(file: String, line: Int, text: String)
+
+  /** Every match of `pattern` in the `.scala` files under `root`. Each
+    * file is read whole, comments blanked out, so a call wrapped across
+    * lines is found and prose about it is not. */
+  def sourceMatches(root: String, pattern: String): Seq[SourceMatch] = {
+    val dir = new java.io.File(root)
+    assert(dir.isDirectory,
+      s"source root $root not found from ${new java.io.File(".").getCanonicalPath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val pat = java.util.regex.Pattern.compile(pattern)
+    walk(dir).flatMap { f =>
+      val code = stripComments(
+        scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.mkString))
+      val found = pat.matcher(code)
+      Iterator.continually(found).takeWhile(_.find()).map { m =>
+        SourceMatch(f.getPath.stripPrefix(s"$root/"),
+          code.substring(0, m.start).count(_ == '\n') + 1, m.group())
+      }.toList
+    }
+  }
+
+  /** `src` with every `//` and (nested) `/* */` comment replaced by
+    * spaces, newlines kept. String and char literals are skipped over,
+    * so a `//` inside a string is not read as a comment. */
+  def stripComments(src: String): String = {
+    val out = new StringBuilder(src)
+    def blank(from: Int, to: Int): Unit =
+      (from until to).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val end = src.indexOf('\n', i) match { case -1 => src.length; case e => e }
+        blank(i, end); i = end
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (depth > 0 && j < src.length) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j); i = j
+      } else if (src.startsWith("\"\"\"", i)) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        i = if (end < 0) src.length else end + 3
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        i = j + 1
+      } else if (src.startsWith("'\\", i) && src.startsWith("'", i + 3)) i += 4
+      else if (src(i) == '\'' && src.startsWith("'", i + 2)) i += 3
+      else i += 1
+    }
+    out.toString
+  }
+
   lazy val session: SparkSession = {
     // per-group warehouse: suites run in concurrently forked JVM groups
     // (build.sbt Test/testGrouping), each with its own graft.tmp.root

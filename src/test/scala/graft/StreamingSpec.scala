@@ -121,6 +121,29 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stream_index_roundtrip: each evaluation writes its own dir under " +
+      "the one per-JVM scratch root, none under java.io.tmpdir") {
+    val q = StreamingQueries.all.find(_.name == "stream_index_roundtrip").get
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def streamDirs = tmp.list().filter(n => n.startsWith("graft-stream") ||
+      (n.startsWith("graft-scratch-") &&
+        n != graft.tools.LocalFs.ScratchRoot.getFileName.toString)).toSet
+    val before = streamDirs
+    val runs = Seq.fill(2)(q.run(spark, sf001))
+    val root = graft.tools.LocalFs.ScratchRoot.toUri.getPath
+    // the run dir (first path element under the root) of every file read
+    val runDirs = runs.map(_.inputFiles.map { f =>
+      val p = new java.net.URI(f).getPath
+      assert(p.startsWith(root), s"$p is outside the scratch root $root")
+      p.stripPrefix(root).split('/').head
+    }.toSet)
+    assert(runDirs.forall(_.size == 1) && runDirs.flatten.distinct.size == 2,
+      s"each run needs its own dir: $runDirs")
+    assert(runs.map(_.count()).distinct.size == 1 && runs.head.count() > 0)
+    assert(streamDirs == before,
+      s"new dirs under $tmp: ${streamDirs -- before}")
+  }
+
   test("compact finalizes a streaming index sink: one file per day, rows unchanged") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String)]
